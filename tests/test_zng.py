@@ -154,12 +154,28 @@ def test_read_any_dispatch(spark, tmp_path):
     assert read_any(spark, p).collect()[0]["n"] == 1
 
 
+# One LZ4-compressed values frame holding four string values
+# "hello", then end-of-stream.  Uncompressed, each value is
+# 19 06 68656c6c6f (type id 25 = string, tag = len+1, body), 28 bytes.
+LZ4_FRAME = bytes.fromhex(
+    "52"  # frame code: C bit 0x40 | values frame 0x10 | len low 4 bits 2
+    "01"  # uvarint len >> 4: payload is 18 bytes
+    "00"  # compression format 0 = LZ4 block
+    "1c"  # uvarint uncompressed size 28
+    "7c"  # token: 7 literals, match length 12+4
+    "190668656c6c6f"  # literals: the first value
+    "0700"  # match offset 7 (overlapping: copies 16 bytes from 7 back)
+    "50"  # token: 5 literals, no match (last sequence)
+    "68656c6c6f"
+    "ff"  # end of stream
+)
+
+
 def test_lz4_pure_python():
-    """The pure-Python LZ4 block decoder against a stream the
-    reference wrote (tutorial files have compressed frames)."""
-    data = open(f"{TUTORIALS}/github2.zng", "rb").read()
-    # frame codes with the C bit set exist in this file
-    assert any(True for _ in decode_zng(data))
+    """The pure-Python LZ4 block decoder on a compressed frame with
+    the C bit set and an overlapping back-reference match."""
+    assert LZ4_FRAME[0] & 0x40
+    assert list(decode_zng(LZ4_FRAME)) == ["hello"] * 4
 
 
 def test_read_zng_job_count_independent_of_shapes(spark, tmp_path):

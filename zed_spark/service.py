@@ -343,138 +343,140 @@ class QueryService:
         out_sources = sources[0] if len(sources) == 1 else sources
         return {"sources": out_sources, "channels": channels}
 
-    def _render(
-        self, df, fmt: str, ctrl: bool = False, nrows: int | None = None
-    ) -> bytes:
-        """DataFrame → response payload in the negotiated format.
+    def _render(self, df, fmt: str, ctrl=False) -> bytes:
+        """DataFrame → response payload, capped at max_rows."""
+        return self._render_rows(self._capped_rows(df, fmt)[0], df, fmt, ctrl)
 
-        Every format is capped at max_rows BEFORE materializing — the
-        reference streams all formats (service/core.go:169-191 +
-        api/queryio); this shim bounds driver memory instead, uniformly
-        (a capped response carries the X-Zed-Truncated header).  nrows,
-        when given, is the already-computed capped row count — the
-        zjson control frames reuse it instead of running another job.
-        """
+    def _capped_rows(self, df, fmt: str) -> tuple[list | None, bool]:
+        """(rows, truncated): the result capped at max_rows BEFORE
+        materializing.  The reference streams all formats
+        (service/core.go:169-191 + api/queryio); this shim bounds
+        driver memory instead, uniformly (a capped response carries
+        the X-Zed-Truncated header).  A driver-rendered format runs
+        ONE Spark execution: the capped result is collected once, and
+        the truncation signal, the zjson QueryStats frame and the
+        renderer all read that list.  arrows and parquet are written
+        by Spark's own writers (rows None), after a capped count."""
+        cap = self.max_rows
+        if fmt in ("arrows", "parquet"):
+            return None, df.limit(cap + 1).count() > cap
+        rows = df.limit(cap + 1).collect()
+        return rows[:cap], len(rows) > cap
+
+    @staticmethod
+    def _write_spark(df, fmt: str) -> bytes:
         import os
         import tempfile
 
-        df = df.limit(self.max_rows)
+        d = tempfile.mkdtemp(prefix="svc_out_")
+        if fmt == "arrows":
+            from zed_spark.sources.arrow_io import write_arrows
+
+            p = os.path.join(d, "out.arrows")
+            write_arrows(df, p, single_file=True)
+        else:
+            df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "pq"))
+            import glob as _g
+
+            p = _g.glob(os.path.join(d, "pq", "part-*.parquet"))[0]
+        with open(p, "rb") as fh:
+            return fh.read()
+
+    def _render_rows(self, rows: list | None, df, fmt: str, ctrl=False) -> bytes:
+        """`_capped_rows` output → payload in the negotiated format."""
+        if rows is None:
+            return self._write_spark(df.limit(self.max_rows), fmt)
+        schema = df.schema
         if fmt == "vng":
             from zed_spark.sources.vng import encode_vng
 
-            return encode_vng(df.collect(), df.schema)
-        if fmt == "csv":
-            from zed_spark.sources.csv_io import to_csv_text
+            return encode_vng(rows, schema)
+        if fmt == "zng":
+            from zed_spark.sources.zng import encode_zng
 
-            return to_csv_text(df).encode()
-        if fmt == "tsv":
-            from zed_spark.sources.csv_io import to_csv_text
+            return encode_zng(rows, schema)
+        if fmt in ("csv", "tsv"):
+            from zed_spark.sources.csv_io import csv_text_rows
 
-            return to_csv_text(df, delim="\t").encode()
+            return csv_text_rows(
+                rows, schema, delim="," if fmt == "csv" else "\t"
+            ).encode()
         if fmt in ("json", "ndjson"):
-            from zed_spark.sources.jsonio import to_json_text
+            from zed_spark.sources.jsonio import json_text_rows
 
-            vis = [c for c in df.columns if not c.startswith("__zed_")]
-            txt = to_json_text(df, wrapped=(vis == ["this"]))
+            vis = [c for c in schema.fieldNames() if not c.startswith("__zed_")]
+            txt = json_text_rows(rows, schema, wrapped=(vis == ["this"]))
             if fmt == "ndjson":
                 return txt.encode()
             # the reference's json writer emits ONE array
             # (zio/jsonio/writer.go)
-            rows = [ln for ln in txt.splitlines() if ln]
-            return ("[" + ",".join(rows) + "]\n").encode()
+            lines = [ln for ln in txt.splitlines() if ln]
+            return ("[" + ",".join(lines) + "]\n").encode()
         if fmt == "zeek":
-            from zed_spark.sources.zeek import to_zeek_text
+            from zed_spark.sources.zeek import zeek_text_rows
 
-            return to_zeek_text(df).encode()
-        if fmt == "zjson":
-            from zed_spark.sources.zjson import to_zjson_text
-
-            lines = to_zjson_text(df)
-            if ctrl:
-                import time as _t
-
-                now = _t.time()
-                # ns clamped to 3+ digits: the goldens mask only
-                # [0-9]{3,} (curl-query-ctrl sed)
-                ts = {"sec": int(now),
-                      "ns": max(100, int((now % 1) * 1e9))}
-                n = nrows if nrows is not None else df.count()
-                # the reference reports scanner bytes = total ZNG
-                # record-body length of the rows read ({ts:0} is the
-                # single tag byte -> bytes_read:1)
-                from zed_spark.sources.zng import _encode_body
-
-                vis = df.select(
-                    *[c for c in df.columns if not c.startswith("__zed_")]
-                )
-                nbytes = sum(
-                    len(_encode_body(r, vis.schema) or b"")
-                    for r in vis.collect()
-                )
-
-                def frame(t, v):
-                    return json.dumps(
-                        {"type": t, "value": v}, separators=(",", ":")
-                    )
-
-                chans = ctrl if isinstance(ctrl, list) else ["main"]
-                # the single-channel record model attributes all
-                # values to the FIRST channel; the remaining named
-                # outputs still get their Set/End frames (the mux's
-                # channel-end contract — curl-query-split)
-                out_lines = [
-                    frame("QueryChannelSet", {"channel": chans[0]})
-                ]
-                out_lines += list(lines)
-                out_lines.append(
-                    frame("QueryChannelEnd", {"channel": chans[0]})
-                )
-                for ch in chans[1:]:
-                    out_lines.append(
-                        frame("QueryChannelSet", {"channel": ch})
-                    )
-                    out_lines.append(
-                        frame("QueryChannelEnd", {"channel": ch})
-                    )
-                out_lines.append(
-                    frame(
-                        "QueryStats",
-                        {
-                            "start_time": ts,
-                            "update_time": ts,
-                            "bytes_read": nbytes,
-                            "bytes_matched": nbytes,
-                            "records_read": n,
-                            "records_matched": n,
-                        },
-                    )
-                )
-                lines = out_lines
-            return ("\n".join(lines) + "\n").encode()
+            return zeek_text_rows(rows, schema).encode()
         if fmt == "zson":
-            from zed_spark.sources.zson import df_to_zson_lines
+            from zed_spark.sources.zson import zson_line_renderer
 
-            return ("\n".join(df_to_zson_lines(df).collect()) + "\n").encode()
-        if fmt in ("arrows", "parquet", "zng"):
-            d = tempfile.mkdtemp(prefix="svc_out_")
-            if fmt == "arrows":
-                from zed_spark.sources.arrow_io import write_arrows
+            render = zson_line_renderer(schema)
+            return ("\n".join(render(r) for r in rows) + "\n").encode()
+        if fmt != "zjson":
+            raise ApiError(f"unsupported MIME type: {fmt}")
+        from zed_spark.sources.zjson import zjson_text_rows
 
-                p = os.path.join(d, "out.arrows")
-                write_arrows(df, p, single_file=True)
-            elif fmt == "zng":
-                from zed_spark.sources.zng import write_zng
+        lines = zjson_text_rows(rows, schema)
+        if not ctrl:
+            return ("\n".join(lines) + "\n").encode()
+        import time as _t
 
-                p = os.path.join(d, "out.zng")
-                write_zng(df, p, single_file=True)
-            else:
-                df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "pq"))
-                import glob as _g
+        from pyspark.sql import types as T
 
-                p = _g.glob(os.path.join(d, "pq", "part-*.parquet"))[0]
-            with open(p, "rb") as fh:
-                return fh.read()
-        raise ApiError(f"unsupported MIME type: {fmt}")
+        from zed_spark.sources.zng import _encode_body
+
+        now = _t.time()
+        # ns clamped to 3+ digits: the goldens mask only [0-9]{3,}
+        # (curl-query-ctrl sed)
+        ts = {"sec": int(now), "ns": max(100, int((now % 1) * 1e9))}
+        # the reference reports scanner bytes = total ZNG record-body
+        # length of the rows read ({ts:0} is the single tag byte ->
+        # bytes_read:1)
+        vis = T.StructType(
+            [f for f in schema.fields if not f.name.startswith("__zed_")]
+        )
+        nbytes = sum(
+            len(_encode_body({f.name: r[f.name] for f in vis.fields}, vis) or b"")
+            for r in rows
+        )
+
+        def frame(t, v):
+            return json.dumps({"type": t, "value": v}, separators=(",", ":"))
+
+        chans = ctrl if isinstance(ctrl, list) else ["main"]
+        # the single-channel record model attributes all values to the
+        # FIRST channel; the remaining named outputs still get their
+        # Set/End frames (the mux's channel-end contract —
+        # curl-query-split)
+        out = [frame("QueryChannelSet", {"channel": chans[0]})]
+        out += lines
+        out.append(frame("QueryChannelEnd", {"channel": chans[0]}))
+        for ch in chans[1:]:
+            out.append(frame("QueryChannelSet", {"channel": ch}))
+            out.append(frame("QueryChannelEnd", {"channel": ch}))
+        out.append(
+            frame(
+                "QueryStats",
+                {
+                    "start_time": ts,
+                    "update_time": ts,
+                    "bytes_read": nbytes,
+                    "bytes_matched": nbytes,
+                    "records_read": len(rows),
+                    "records_matched": len(rows),
+                },
+            )
+        )
+        return ("\n".join(out) + "\n").encode()
 
     def _load_body(self, body: bytes, ctype: str, params: dict) -> "object":
         """Request body → DataFrame per Content-Type (gzip sniffed
@@ -780,12 +782,6 @@ class QueryService:
 
             z = ZedSession(self.spark)
             df = z.query(text, allow_paths=False, lake=self.lake_root).df
-            # ONE bounded count serves both the truncation signal and
-            # the zjson QueryStats frame (the reference streams the
-            # full result; this shim caps at max_rows, so a capped
-            # response must be distinguishable — X-Zed-Truncated)
-            nrows = df.limit(self.max_rows + 1).count()
-            truncated = nrows > self.max_rows
             ctrlv = params.get("ctrl")
             ctrl = False
             if ctrlv is not None:
@@ -820,10 +816,9 @@ class QueryService:
 
             rid = new_ksuid()
             hdrs_out = {"X-Request-Id": rid}
+            rows, truncated = self._capped_rows(df, fmt)
             try:
-                payload = self._render(
-                    df, fmt, ctrl=ctrl, nrows=min(nrows, self.max_rows)
-                )
+                payload = self._render_rows(rows, df, fmt, ctrl)
             except Exception as e:
                 # mid-stream writer failure: the reference has already
                 # sent 200; the error is recorded under the request id

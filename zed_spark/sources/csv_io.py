@@ -230,64 +230,41 @@ def to_csv_text(df: DataFrame, delim: str = ",") -> str:
     reject like the reference csvio writer: the first row's shape
     defines the header and rows stream until a different shape
     appears, then CsvShapeError carries the partial text."""
-    from zed_spark.sources.gates import gate_driver_rows
+    from zed_spark.sources.gates import collect_driver_rows
 
-    gate_driver_rows(df, "csv text format")
+    rows = collect_driver_rows(df, "csv text format")
+    return csv_text_rows(rows, df.schema, delim)
+
+
+def csv_text_rows(rows, schema: T.StructType, delim: str = ",") -> str:
+    """to_csv_text over already-collected rows of `schema`."""
+    names = schema.fieldNames()
     hints = {}
-    if "__zed_types" in df.columns:
-        first = df.select("__zed_types").first()
-        if first and first[0]:
-            hints = dict(first[0])
-    miss_rows = None
-    if "__zed_missing" in df.columns:
-        miss_rows = [
-            tuple(sorted(m for m in (r[0] or []) if "\x00" not in m))
-            for r in df.select("__zed_missing").collect()
+    if "__zed_types" in names and rows and rows[0]["__zed_types"]:
+        hints = dict(rows[0]["__zed_types"])
+    shapes = None
+    absent = ()
+    if "__zed_missing" in names:
+        shapes = [
+            tuple(sorted(m for m in (r["__zed_missing"] or []) if "\x00" not in m))
+            for r in rows
         ]
-        if miss_rows and any(m != miss_rows[0] for m in miss_rows):
-            return _csv_per_shape(df, miss_rows, hints, delim)
-    df = df.drop(*[c for c in df.columns if c.startswith("__zed_")])
-    leaves = _flat_leaves(df.schema)
-    lines = [delim.join(_quote_min(n, delim) for n, _ in leaves)]
-    for row in df.collect():
-        d = row.asDict(recursive=True)
-
-        def get(dotted):
-            cur = d
-            for p in dotted.split("."):
-                if not isinstance(cur, dict):
-                    return None
-                cur = cur.get(p)
-            return cur
-
-        lines.append(
-            delim.join(
-                _quote_min(_render(get(n), dt, hints.get(n)), delim)
-                for n, dt in leaves
-            )
-        )
-    return "\n".join(lines) + "\n"
-
-
-def _csv_per_shape(df: DataFrame, miss_rows, hints, delim: str) -> str:
-    """Reject a mixed-shape stream after emitting the leading run of
-    first-shape rows (csvio writer semantics)."""
-    first_shape = miss_rows[0]
-    absent = set(first_shape)
+        if any(m != shapes[0] for m in shapes):
+            # mixed shapes: the first row's shape defines the header
+            absent = shapes[0]
+        else:
+            shapes = None
     vis = [
         f
-        for f in df.schema.fields
+        for f in schema.fields
         if not f.name.startswith("__zed_") and f.name not in absent
     ]
-    from pyspark.sql import types as T
-
     leaves = _flat_leaves(T.StructType(vis))
     lines = [delim.join(_quote_min(n, delim) for n, _ in leaves)]
-    rows = df.drop(
-        *[c for c in df.columns if c.startswith("__zed_")]
-    ).collect()
-    for row, shape in zip(rows, miss_rows):
-        if shape != first_shape:
+    for i, row in enumerate(rows):
+        if shapes is not None and shapes[i] != absent:
+            # csvio writer semantics: reject a mixed-shape stream
+            # after emitting the leading run of first-shape rows
             raise CsvShapeError("\n".join(lines) + "\n")
         d = row.asDict(recursive=True)
 

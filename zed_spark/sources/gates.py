@@ -7,11 +7,11 @@ result sets, wrong for bulk data. These gates mirror the VNG
 (512 MiB) and ZSON-ingest (256 MiB) gates: past the limit the call
 fails fast with conversion advice instead of OOM-ing the driver.
 
-The check is `df.limit(N+1).count()` — CollectLimit short-circuits
-(Spark computes partitions incrementally until the limit is hit), so
-an oversized frame fails after touching a fraction of its input,
-and the served paths (which pre-cap at max_rows) pass a frame the
-probe scans in one small job.
+The gate is the formatter's own collect, `df.limit(N+1).collect()`:
+CollectLimit short-circuits (Spark computes partitions incrementally
+until the limit is hit), so an oversized frame fails after touching
+a fraction of its input, and a frame under the gate is evaluated
+once, not probed and then collected.
 """
 
 from __future__ import annotations
@@ -30,13 +30,16 @@ def _max_rows() -> int:
     )
 
 
-def gate_driver_rows(df: DataFrame, what: str) -> None:
-    """Raise when `df` exceeds the driver-side formatting row gate."""
+def collect_driver_rows(df: DataFrame, what: str) -> list:
+    """`df.collect()`, raising when `df` exceeds the driver-side
+    formatting row gate."""
     limit = _max_rows()
-    if df.limit(limit + 1).count() > limit:
+    rows = df.limit(limit + 1).collect()
+    if len(rows) > limit:
         raise ValueError(
             f"{what}: result exceeds {limit} rows — this format "
             f"renders on the driver; write parquet/csv/json via the "
             f"distributed writers for data at scale, cap the result "
             f"with head/limit, or raise SPARK_GRAFT_TEXT_FORMAT_MAX_ROWS"
         )
+    return rows

@@ -279,15 +279,23 @@ def to_json_text(
     are omitted, matching the reference's per-row record shapes.
     Driver-side (gated): a display/export format for bounded
     results; the distributed JSON sink handles data at scale."""
-    from zed_spark.sources.gates import gate_driver_rows
+    from zed_spark.sources.gates import collect_driver_rows
 
-    gate_driver_rows(df, "json text format")
-    has_hints = "__zed_types" in df.columns
-    has_miss = "__zed_missing" in df.columns
-    vis = [c for c in df.columns if not c.startswith("__zed_")]
-    schema = {f.name: f.dataType for f in df.schema.fields}
+    rows = collect_driver_rows(df, "json text format")
+    return json_text_rows(rows, df.schema, wrapped, pretty)
+
+
+def json_text_rows(
+    rows, schema, wrapped: bool = False, pretty: int | None = None
+) -> str:
+    """to_json_text over already-collected rows of `schema`."""
+    names = schema.fieldNames()
+    has_hints = "__zed_types" in names
+    has_miss = "__zed_missing" in names
+    vis = [c for c in names if not c.startswith("__zed_")]
+    schema = {f.name: f.dataType for f in schema.fields}
     lines = []
-    for row in df.collect():
+    for row in rows:
         d = row.asDict(recursive=True)
         # hints are PER ROW: each value carries its own precise type
         hints = (

@@ -54,6 +54,7 @@ def new_ksuid() -> str:
     return ksuid_encode_bytes(ts.to_bytes(4, "big") + _os.urandom(16))
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -92,158 +93,132 @@ class _Ord:
         return self.v == other.v
 
 
-def _with_zcode_for_collisions(
-    df: DataFrame, key_name: str | None
-) -> DataFrame:
-    """Attach `__zed_zcode` — the record's ZNG body bytes, the
-    reference's equal-key tiebreak (zbuf/merger.go:20-31) — computed
-    ONLY for rows whose pool key actually collides.  Rows with a
-    unique key take a JVM-only leg (empty tiebreak, never compared
-    against an equal key), so the Python encode cost is proportional
-    to the collision set, not the table.  The encode itself is
-    Arrow-batched (mapInArrow), not row-at-a-time pickle.
+def _row_zcoder(names: list[str], sub_schema):
+    """code_of(row) → the record's ZNG body bytes, the reference's
+    equal-key tiebreak (zbuf/merger.go:20-31).  `row` is a dict as
+    pyarrow's to_pylist yields it, holding the `sub_schema` fields
+    plus whichever sidecars of `names` the frame carries."""
+    from pyspark.sql import types as T
 
-    key_name None = TOTAL collision (the pool key is missing from
+    from zed_spark.sources.restore import row_zcode
+    from zed_spark.sources.zng import _encode_body
+    from zed_spark.sources.ztypes import parse_type_string
+
+    # a lone `this` column wraps a BARE value stream: the comparator
+    # sees the value itself, not a {this:...} record
+    bare = [f.name for f in sub_schema.fields] == ["this"]
+    sidecars = any(
+        c in names for c in ("__zed_missing", "__zed_types")
+    ) or any(c.startswith("__zed_ns_") for c in names)
+    ns_cols = {
+        c[len("__zed_ns_"):]: c for c in names if c.startswith("__zed_ns_")
+    }
+    desc_cache: dict = {}
+
+    def fix(v, dt):
+        # pyarrow to_pylist: maps arrive as [(k, v), ...] pairs
+        if v is None:
+            return None
+        if isinstance(dt, T.MapType):
+            items = v.items() if isinstance(v, dict) else v
+            return {
+                fix(k, dt.keyType): fix(x, dt.valueType) for k, x in items
+            }
+        if isinstance(dt, T.ArrayType):
+            return [fix(x, dt.elementType) for x in v]
+        if isinstance(dt, T.StructType):
+            return {f.name: fix(v.get(f.name), f.dataType) for f in dt.fields}
+        return v
+
+    def hint_desc(h):
+        d = desc_cache.get(h)
+        if d is None:
+            from zed_spark.sources.ztypes import canon_desc
+
+            try:
+                d = canon_desc(parse_type_string(h))
+            except Exception:
+                d = ("prim", "string")
+            desc_cache[h] = d
+        return d
+
+    def code_of(r: dict) -> bytes:
+        fixed = {
+            f.name: fix(r.get(f.name), f.dataType) for f in sub_schema.fields
+        }
+        if bare:
+            from zed_spark.sources.restore import (
+                convert as _rconv,
+                desc_of_spark as _rdesc,
+            )
+            from zed_spark.sources.zng import encode_body_desc
+
+            f0 = sub_schema.fields[0]
+            h = dict(r.get("__zed_types") or {}).get("")
+            d0 = hint_desc(h) if h else _rdesc(f0.dataType)
+            try:
+                return (
+                    encode_body_desc(_rconv(fixed["this"], f0.dataType, d0), d0)
+                    or b""
+                )
+            except Exception:
+                return _encode_body(fixed["this"], f0.dataType) or b""
+        if not sidecars:
+            return _encode_body(fixed, sub_schema) or b""
+        # restore the record's own zed type from the sidecars so the
+        # tiebreak bytes match the reference's valueAsBytes (per-row
+        # presence, unions, sets, enums, ns times)
+        missing = {
+            m for m in (r.get("__zed_missing") or []) if "\x00" not in m
+        }
+        hints = dict(r.get("__zed_types") or {})
+        ns = {
+            c: r.get(nc) for c, nc in ns_cols.items() if r.get(nc) is not None
+        }
+        try:
+            return row_zcode(
+                fixed.get, sub_schema.fields, hints, missing, ns, hint_desc
+            )
+        except Exception:
+            return _encode_body(fixed, sub_schema) or b""
+
+    return code_of
+
+
+def _zcode_tiebreak(df: DataFrame, collides=None):
+    """The equal-key tiebreak as a sort-key expression: one
+    Arrow-batched Python UDF over the rows `collides` selects, giving
+    each its ZNG body bytes (`_row_zcoder`) and every other row b"".
+    A unique key is never compared against an equal key, so the
+    Python encode cost follows the collision set, not the table.
+
+    Because the tiebreak lives only inside the sort key, an optimizer
+    that drops the sort (EliminateSorts under an order-insensitive
+    aggregate) drops the encode, and the collision window feeding
+    `collides`, with it.
+
+    collides None = TOTAL collision (the pool key is missing from
     every row): every row is encoded — that IS the reference cost
     there too, its comparator evaluates valueAsBytes on every tie."""
     from pyspark.sql import types as T
-    from pyspark.sql.window import Window
 
     real = [c for c in df.columns if not c.startswith("__zed_")]
-    names_all = list(df.columns)
-    sub_schema = df.select(*real).schema
-    # a lone `this` column wraps a BARE value stream: the comparator
-    # sees the value itself, not a {this:...} record
-    bare = real == ["this"]
+    names = real + [
+        c
+        for c in df.columns
+        if c in ("__zed_missing", "__zed_types") or c.startswith("__zed_ns_")
+    ]
+    code_of = _row_zcoder(names, df.select(*real).schema)
 
-    if key_name is None:
-        uniq = None
-        dup_in = df
-    else:
-        w = Window.partitionBy(key_name)
-        flagged = df.withColumn("__zed_dupcnt", F.count(F.lit(1)).over(w))
-        uniq = (
-            flagged.filter(F.col("__zed_dupcnt") <= 1)
-            .drop("__zed_dupcnt")
-            .withColumn("__zed_zcode", F.lit(b""))
+    @F.arrow_udf(T.BinaryType())
+    def encode(rows: pa.Array) -> pa.Array:
+        return pa.array(
+            [b"" if r is None else code_of(r) for r in rows.to_pylist()],
+            type=pa.binary(),
         )
-        dup_in = flagged.filter(F.col("__zed_dupcnt") > 1).drop(
-            "__zed_dupcnt"
-        )
-    out_schema = T.StructType(
-        list(dup_in.schema.fields)
-        + [T.StructField("__zed_zcode", T.BinaryType())]
-    )
 
-    def _encode_batches(batches):
-        import pyarrow as pa
-
-        from zed_spark.sources.zng import _encode_body
-
-        def fix(v, dt):
-            # pyarrow to_pylist: maps arrive as [(k, v), ...] pairs
-            if v is None:
-                return None
-            if isinstance(dt, T.MapType):
-                items = v.items() if isinstance(v, dict) else v
-                return {
-                    fix(k, dt.keyType): fix(x, dt.valueType)
-                    for k, x in items
-                }
-            if isinstance(dt, T.ArrayType):
-                return [fix(x, dt.elementType) for x in v]
-            if isinstance(dt, T.StructType):
-                return {
-                    f.name: fix(v.get(f.name), f.dataType)
-                    for f in dt.fields
-                }
-            return v
-
-        from zed_spark.sources.restore import row_zcode
-        from zed_spark.sources.ztypes import parse_type_string
-
-        sidecars = any(
-            c in names_all for c in ("__zed_missing", "__zed_types")
-        ) or any(c.startswith("__zed_ns_") for c in names_all)
-        desc_cache: dict = {}
-
-        def hint_desc(h):
-            d = desc_cache.get(h)
-            if d is None:
-                from zed_spark.sources.ztypes import canon_desc
-
-                try:
-                    d = canon_desc(parse_type_string(h))
-                except Exception:
-                    d = ("prim", "string")
-                desc_cache[h] = d
-            return d
-
-        ns_cols = {
-            c[len("__zed_ns_"):]: c
-            for c in names_all
-            if c.startswith("__zed_ns_")
-        }
-
-        def code_of(r: dict) -> bytes:
-            fixed = {
-                f.name: fix(r.get(f.name), f.dataType)
-                for f in sub_schema.fields
-            }
-            if bare:
-                from zed_spark.sources.restore import (
-                    convert as _rconv,
-                    desc_of_spark as _rdesc,
-                )
-                from zed_spark.sources.zng import encode_body_desc
-
-                f0 = sub_schema.fields[0]
-                h = dict(r.get("__zed_types") or {}).get("")
-                d0 = hint_desc(h) if h else _rdesc(f0.dataType)
-                try:
-                    return (
-                        encode_body_desc(
-                            _rconv(fixed["this"], f0.dataType, d0), d0
-                        )
-                        or b""
-                    )
-                except Exception:
-                    return _encode_body(fixed["this"], f0.dataType) or b""
-            if not sidecars:
-                return _encode_body(fixed, sub_schema) or b""
-            # restore the record's own zed type from the sidecars so
-            # the tiebreak bytes match the reference's valueAsBytes
-            # (per-row presence, unions, sets, enums, ns times)
-            missing = {
-                m
-                for m in (r.get("__zed_missing") or [])
-                if "\x00" not in m
-            }
-            hints = dict(r.get("__zed_types") or {})
-            ns = {
-                c: r.get(nc)
-                for c, nc in ns_cols.items()
-                if r.get(nc) is not None
-            }
-            try:
-                return row_zcode(
-                    fixed.get, sub_schema.fields, hints, missing, ns,
-                    hint_desc,
-                )
-            except Exception:
-                return _encode_body(fixed, sub_schema) or b""
-
-        for batch in batches:
-            rows = batch.to_pylist()
-            codes = [code_of(r) for r in rows]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)]
-                + [pa.array(codes, type=pa.binary())],
-                names=list(batch.schema.names) + ["__zed_zcode"],
-            )
-
-    dup = dup_in.mapInArrow(_encode_batches, out_schema)
-    return dup if uniq is None else uniq.unionByName(dup)
+    row = F.struct(*[F.col("`%s`" % c.replace("`", "``")) for c in names])
+    return encode(row if collides is None else F.when(collides, row))
 
 
 def _notify_commit(event: dict) -> None:
@@ -452,34 +427,40 @@ class Pool:
     def _branches_path(self) -> str:
         return fsio.join(self.meta_dir, "branches.json")
 
-    def branches(self) -> dict[str, dict]:
+    def branches(self, commits: list[dict] | None = None) -> dict[str, dict]:
         """{branch: {"tip": commit|None, "base": commit|None}}.
         A log written before branching existed implies main's tip is
-        the last entry in file order."""
+        the last entry in file order (`commits`: the log, if already
+        read)."""
         path = self._branches_path()
         if fsio.exists(path):
             return json.loads(fsio.read_text(path))
-        cs = self.commits()
+        cs = self.commits() if commits is None else commits
         return {"main": {"tip": cs[-1]["commit"] if cs else None, "base": None}}
 
     def _save_branches(self, b: dict) -> None:
         fsio.write_text(self._branches_path(), json.dumps(b))
 
-    def _commit_index(self) -> dict[str, dict]:
+    def _commit_index(
+        self, commits: list[dict] | None = None
+    ) -> dict[str, dict]:
         """id → entry with parent links; legacy entries (no parent
         field) chain in file order."""
         out: dict[str, dict] = {}
         prev = None
-        for c in self.commits():
+        for c in self.commits() if commits is None else commits:
             c = dict(c)
             c.setdefault("parent", prev)
             out[c["commit"]] = c
             prev = c["commit"]
         return out
 
-    def _chain(self, tip: str | None) -> list[dict]:
+    def _chain(
+        self, tip: str | None, by_id: dict[str, dict] | None = None
+    ) -> list[dict]:
         """Commits root-first from a tip."""
-        by_id = self._commit_index()
+        if by_id is None:
+            by_id = self._commit_index()
         chain: list[dict] = []
         cur = tip
         while cur is not None:
@@ -516,15 +497,17 @@ class Pool:
         b.pop(name, None)
         self._save_branches(b)
 
-    def _live_at(self, tip: str | None) -> list[str]:
-        live: list[str] = []
-        for c in self._chain(tip):
+    def _live_at(
+        self, tip: str | None, by_id: dict[str, dict] | None = None
+    ) -> list[str]:
+        # an insertion-ordered dict: O(1) removes, adds keep log order
+        live: dict[str, None] = {}
+        for c in self._chain(tip, by_id):
             for obj in c.get("add", []):
-                live.append(obj)
+                live[obj] = None
             for obj in c.get("remove", []):
-                if obj in live:
-                    live.remove(obj)
-        return live
+                live.pop(obj, None)
+        return list(live)
 
     def _live_objects(self, branch: str = "main") -> list[str]:
         """Object file names live on a branch (adds minus deletes
@@ -689,7 +672,9 @@ class Pool:
             return datetime.fromisoformat(v["v"])
         return v
 
-    def _key_dups_from_stats(self, objs) -> bool | None:
+    def _key_dups_from_stats(
+        self, objs, commits: list[dict] | None = None
+    ) -> bool | None:
         """Plan-time key-collision answer from import-time stats
         (round-8 verdict item 6): True/False when every live object
         carries the recorded bit + key range, None for legacy objects
@@ -698,7 +683,7 @@ class Pool:
         across objects, or two objects' key ranges touch."""
         by_obj = {
             obj: c.get("stats", {})
-            for c in self.commits()
+            for c in (self.commits() if commits is None else commits)
             for obj in c.get("add", [])
         }
         ranges = []
@@ -785,17 +770,25 @@ class Pool:
         key-sorted, key-range predicates skip whole files.
 
         ordered=True reproduces the reference's key-ordered scan
-        (asc/desc per the pool config). It costs a global sort in
-        Spark, so it is OFF by default — analytical consumers don't
-        need scan order, and at scale an always-on sort would
-        dominate; the ztest harness turns it on for text-golden
-        parity."""
-        if branch in self.branches():
-            objs = self._live_objects(branch)
-        elif branch in self._commit_index():
+        (asc/desc per the pool config; equal keys by the record's ZNG
+        bytes).  The order is one global sort whose key carries the
+        equal-key tiebreak, so it costs nothing when the consumer
+        ignores order: under an order-insensitive aggregate (count,
+        min, max, an integral sum) Catalyst drops the sort, and the
+        tiebreak's collision window and Python encode with it.  Where
+        the order is consumed (head, tail, a float sum) the pool is
+        read once.  Off by default: analytical callers that never
+        need order skip the sort."""
+        # one read of the commit log and the branch refs per scan
+        commits = self.commits()
+        by_id = self._commit_index(commits)
+        refs = self.branches(commits)
+        if branch in refs:
+            objs = self._live_at(refs[branch]["tip"], by_id)
+        elif branch in by_id:
             # time travel: `from pool@<commit-id>` scans the object
             # set live AT that commit (lake/ztests/time-travel)
-            objs = self._live_at(branch)
+            objs = self._live_at(branch, by_id)
         else:
             raise ValueError(f'"{branch}": branch not found')
         if not objs:
@@ -821,65 +814,56 @@ class Pool:
             ns_cols = [c for c in df.columns if c.startswith("__zed_ns_")]
             if ns_cols:
                 df = df.drop(*ns_cols)
-        if not ordered and "__zed_seq" in df.columns:
-            df = df.drop("__zed_seq")
-        if ordered:
-            # equal keys order by the record's zcode encoding in the
-            # pool's direction: the import comparator appends a
-            # valueAsBytes evaluator to establish a total order
-            # (zbuf/merger.go:20-31 NewComparatorNullsMax). The
-            # encode is Python, so it is gated twice for scale:
-            # (1) a plan-time probe (single partial-agg job, one-row
-            # result) detects whether ANY key collides — unique-key
-            # scans plan NO Python eval node at all; (2) when
-            # collisions exist, only the colliding rows flow through
-            # an Arrow-batched mapInArrow encoder — never the whole
-            # table, never row-at-a-time pickle.
-            desc = self.cfg.order == "desc"
-            if self.cfg.key not in df.columns:
-                # fully keyless pool data: every key is missing, so
-                # every row ties and the import comparator's
-                # valueAsBytes evaluator orders the WHOLE object by
-                # its encoded bytes in the pool direction
-                # (zbuf/merger.go:29-31); equal bytes keep load
-                # order (sort.SliceStable via __zed_seq)
-                df = _with_zcode_for_collisions(df, None)
-                tie = F.col("__zed_zcode")
-                order = [tie.desc() if desc else tie.asc()]
-                if "__zed_seq" in df.columns:
-                    order.append(F.col("__zed_seq").asc())
-                return df.orderBy(*order).drop(
-                    "__zed_zcode", "__zed_seq"
-                )
-            key = F.col(self.cfg.key)
-            # answer "do any keys collide?" from import-time commit
-            # stats (zero jobs at plan time); the groupBy probe runs
-            # only for legacy objects without the recorded bit
-            has_dups = self._key_dups_from_stats(objs)
-            if has_dups is None:
-                has_dups = (
-                    df.groupBy(self.cfg.key)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-            # nulls are the MAX key value in either pool order
-            # (runtime/sam/op/meta/ztests/nulls-max.yaml): asc →
-            # nulls last, desc → nulls first; equal keys order by
-            # the record's zcode bytes (zbuf/merger.go:20-31)
-            order = [key.desc_nulls_first() if desc else key.asc_nulls_last()]
-            if has_dups:
-                df = _with_zcode_for_collisions(df, self.cfg.key)
-                tie = F.col("__zed_zcode")
-                order.append(tie.desc() if desc else tie.asc())
-                df = df.orderBy(*order).drop("__zed_zcode", "__zed_seq")
-            else:
-                df = df.orderBy(*order).drop("__zed_seq")
-            # note the scan order for a downstream merge join (the
-            # reference join adopts a pre-sorted side's direction)
-            df._zed_sort = (self.cfg.key, desc)
+        if not ordered:
+            return df.drop("__zed_seq") if "__zed_seq" in df.columns else df
+        # equal keys order by the record's zcode encoding in the pool's
+        # direction: the import comparator appends a valueAsBytes
+        # evaluator to establish a total order (zbuf/merger.go:20-31
+        # NewComparatorNullsMax)
+        desc = self.cfg.order == "desc"
+        if self.cfg.key not in df.columns:
+            # fully keyless pool data: every key is missing, so every
+            # row ties and the import comparator's valueAsBytes
+            # evaluator orders the WHOLE object by its encoded bytes in
+            # the pool direction (zbuf/merger.go:29-31); equal bytes
+            # keep load order (sort.SliceStable via __zed_seq)
+            tie = _zcode_tiebreak(df)
+            order = [tie.desc() if desc else tie.asc()]
+            if "__zed_seq" in df.columns:
+                order.append(F.col("__zed_seq").asc())
+            return df.orderBy(*order).drop("__zed_seq")
+        key = F.col(self.cfg.key)
+        # answer "do any keys collide?" from import-time commit stats
+        # (zero jobs at plan time); the groupBy probe runs only for
+        # legacy objects without the recorded bit.  Unique-key scans
+        # plan no tiebreak at all.
+        has_dups = self._key_dups_from_stats(objs, commits)
+        if has_dups is None:
+            has_dups = (
+                df.groupBy(self.cfg.key)
+                .count()
+                .filter(F.col("count") > 1)
+                .limit(1)
+                .count()
+                > 0
+            )
+        # nulls are the MAX key value in either pool order
+        # (runtime/sam/op/meta/ztests/nulls-max.yaml): asc → nulls
+        # last, desc → nulls first
+        order = [key.desc_nulls_first() if desc else key.asc_nulls_last()]
+        if has_dups:
+            from pyspark.sql.window import Window
+
+            tie = _zcode_tiebreak(df, F.col("__zed_dupcnt") > 1)
+            df = df.withColumn(
+                "__zed_dupcnt",
+                F.count(F.lit(1)).over(Window.partitionBy(self.cfg.key)),
+            )
+            order.append(tie.desc() if desc else tie.asc())
+        df = df.orderBy(*order).drop("__zed_dupcnt", "__zed_seq")
+        # note the scan order for a downstream merge join (the
+        # reference join adopts a pre-sorted side's direction)
+        df._zed_sort = (self.cfg.key, desc)
         return df
 
     def scan_range(self, lo, hi, branch: str = "main") -> DataFrame:

@@ -429,22 +429,18 @@ def _probe_union(mv, mdt, udesc) -> ZUnion | None:
     raise _Mismatch(f"no union member matches: {last}")
 
 
-def restore_rows(df, rows=None) -> list:
-    """[(value, descriptor)] per row — the record's own zed type.
-
-    `rows` may carry pre-collected Rows (the caller controls the
-    limit); otherwise the frame is collected as-is."""
+def restore_rows(schema, rows) -> list:
+    """[(value, descriptor)] per row of `schema` — the record's own
+    zed type."""
     from zed_spark.sources.ztypes import parse_type_string
 
-    schema = df.schema
-    if rows is None:
-        rows = df.collect()
+    names = schema.fieldNames()
     fields = [f for f in schema.fields if not f.name.startswith("__zed_")]
-    has_miss = "__zed_missing" in df.columns
-    has_types = "__zed_types" in df.columns
+    has_miss = "__zed_missing" in names
+    has_types = "__zed_types" in names
     ns_cols = {
         c[len("__zed_ns_"):]: c
-        for c in df.columns
+        for c in names
         if c.startswith("__zed_ns_")
     }
     desc_cache: dict = {}

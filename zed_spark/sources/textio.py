@@ -97,13 +97,12 @@ def _leaves(v, t: T.StructType, missing: set, prefix: str) -> list[str]:
 def to_text_text(df: DataFrame) -> str:
     """Render a DataFrame as reference-style text lines. Driver-side
     (gated): a display format, not a storage sink."""
-    from zed_spark.sources.gates import gate_driver_rows
+    from zed_spark.sources.gates import collect_driver_rows
 
-    gate_driver_rows(df, "text format")
     schema = df.schema
     vis = [f for f in schema.fields if not f.name.startswith("__zed_")]
     lines = []
-    for row in df.collect():
+    for row in collect_driver_rows(df, "text format"):
         d = row.asDict(recursive=True)
         missing = set(d.get("__zed_missing") or [])
         missing = {m.split("\x00")[0] for m in missing if "\x00" not in m}
@@ -145,14 +144,13 @@ def to_table_text(df: DataFrame) -> str:
     with Go's tabwriter(minwidth 0, tabwidth 8, padding 1) — every
     column padded to its max cell width plus one space, the last
     column unpadded. Driver-side (gated): a display format."""
-    from zed_spark.sources.gates import gate_driver_rows
+    from zed_spark.sources.gates import collect_driver_rows
 
-    gate_driver_rows(df, "table format")
     schema = df.schema
     vis = [f for f in schema.fields if not f.name.startswith("__zed_")]
     header = _flat_names(T.StructType(vis))
     rows: list[list[str]] = []
-    for row in df.collect():
+    for row in collect_driver_rows(df, "table format"):
         d = row.asDict(recursive=True)
         cells: list[str] = []
         for f in vis:

@@ -892,6 +892,13 @@ def to_zeek_text(df: DataFrame) -> str:
     first row's path→zed-type map overrides the widened static
     column types — uint64 renders as count, duration as interval
     seconds, ip/net as addr/subnet (zng-types.yaml)."""
+    return zeek_text_rows(df.collect(), df.schema)
+
+
+def zeek_text_rows(rows, schema: T.StructType) -> str:
+    """to_zeek_text over already-collected rows of `schema`."""
+    from pyspark.sql import Row
+
     from zed_spark.schema import is_union_type
 
     # value|error CARRIERS (struct<tag, v0, e1...>) unwrap to their
@@ -900,38 +907,45 @@ def to_zeek_text(df: DataFrame) -> str:
     # sees the value side (zson/ztests/cut-record). A row actually
     # holding the error alternative is unrepresentable, like the
     # reference writer's error.
-    unwraps = []
-    for f in df.schema.fields:
+    unwraps = {}
+    for f in schema.fields:
         if (
             isinstance(f.dataType, T.StructType)
             and is_union_type(f.dataType)
             and [g.name for g in f.dataType.fields if g.name.startswith("v")]
             == ["v0"]
         ):
-            unwraps.append(f.name)
+            unwraps[f.name] = f.dataType["v0"].dataType
     if unwraps:
-        bad = F.lit(False)
-        for c in unwraps:
-            bad = bad | (F.col(c).getField("tag") != 0)
-        if df.filter(bad).limit(1).count():
+        if any(
+            r[c] is not None and r[c]["tag"] not in (0, None)
+            for r in rows
+            for c in unwraps
+        ):
             raise ValueError(
                 "error value: type cannot be represented in zeek format"
             )
-        df = df.select(
-            *[
-                F.col(c).getField("v0").alias(c) if c in unwraps else F.col(c)
-                for c in df.columns
-            ]
-        )
+
+        def unwrap(r):
+            d = r.asDict()
+            for c in unwraps:
+                d[c] = None if d[c] is None else d[c]["v0"]
+            return Row(**d)
+
+        rows = [unwrap(r) for r in rows]
+        schema = T.StructType([
+            T.StructField(f.name, unwraps[f.name], True)
+            if f.name in unwraps else f
+            for f in schema.fields
+        ])
     hints = {}
-    sidecar = "__zed_types" in df.columns
+    sidecar = "__zed_types" in schema.fieldNames()
+    if sidecar and rows and rows[0]["__zed_types"]:
+        hints = dict(rows[0]["__zed_types"])
+    vis = T.StructType(
+        [f for f in schema.fields if not f.name.startswith("__zed_")]
+    )
     if sidecar:
-        first = df.select("__zed_types").first()
-        if first and first[0]:
-            hints = dict(first[0])
-    keep = [c for c in df.columns if not c.startswith("__zed_")]
-    if sidecar:
-        rows = df.select(*keep, "__zed_types").collect()
         sigs = {
             tuple(sorted((r["__zed_types"] or {}).items())) for r in rows
         }
@@ -940,9 +954,6 @@ def to_zeek_text(df: DataFrame) -> str:
             # #path/#fields/#types on every type change
             # (zeekio/ztests/multizng) — render block-by-block with
             # each block's own type hints
-            import zed_spark.schema as _zs
-
-            schema = df.select(*keep).schema
             out: list[str] = []
             started = False
             cur_sig = object()
@@ -950,7 +961,7 @@ def to_zeek_text(df: DataFrame) -> str:
                 h = dict(r["__zed_types"] or {})
                 sig = tuple(sorted(h.items()))
                 if sig != cur_sig:
-                    fields = _flatten_fields(schema, h)
+                    fields = _flatten_fields(vis, h)
                     # restrict to the row-type's own fields when the
                     # root descriptor is known (mixed field sets)
                     if "" in h:
@@ -1002,9 +1013,8 @@ def to_zeek_text(df: DataFrame) -> str:
                         )
                     )
             return "\n".join(out) + ("\n" if out else "")
-    df = df.drop(*[c for c in df.columns if c.startswith("__zed_")])
-    fields = _flatten_fields(df.schema, hints)
-    lines = list(_render_rows(df.collect(), fields))
+    fields = _flatten_fields(vis, hints)
+    lines = list(_render_rows(rows, fields))
     return "\n".join(lines) + ("\n" if lines else "")
 
 

@@ -355,20 +355,24 @@ def to_zjson_text(df: DataFrame) -> list[str]:
     and type-VALUED columns, whose values render as type trees in
     the shared type context (zjsonio/ztests/empty-records,
     type-value)."""
+    return zjson_text_rows(df.collect(), df.schema)
+
+
+def zjson_text_rows(rows, schema: T.StructType) -> list[str]:
+    """to_zjson_text over already-collected rows of `schema`."""
     from zed_spark.sources.ztypes import parse_type_string
 
-    if "__zed_missing" in df.columns:
+    names = schema.fieldNames()
+    if "__zed_missing" in names:
         # mixed-shape frame: restore each row's own record type
         # (presence + precise types) and render from descriptors
         from zed_spark.sources.restore import restore_rows
 
-        return zjson_lines_restored(restore_rows(df))
-    keep = [c for c in df.columns if not c.startswith("__zed_")]
-    has_t = "__zed_types" in df.columns
-    rows = df.select(
-        *keep, *(["__zed_types"] if has_t else [])
-    ).collect()
-    schema = df.select(*keep).schema
+        return zjson_lines_restored(restore_rows(schema, rows))
+    has_t = "__zed_types" in names
+    schema = T.StructType(
+        [f for f in schema.fields if not f.name.startswith("__zed_")]
+    )
     enc = _TypeEncoder()
     memo: dict = {}
     outer_ids: dict = {}

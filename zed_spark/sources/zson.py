@@ -1443,15 +1443,15 @@ def df_to_zson_pretty(df: DataFrame) -> list[str]:
     collect — this is a display format for small result sets, not a
     storage sink; honors the __zed_missing presence sidecar like the
     line writer. Gated like the other driver-side formatters."""
-    from zed_spark.sources.gates import gate_driver_rows
+    from zed_spark.sources.gates import collect_driver_rows
 
-    gate_driver_rows(df, "pretty zson format")
+    rows = collect_driver_rows(df, "pretty zson format")
     schema = df.schema
     vis = [f.name for f in schema.fields if not f.name.startswith("__zed_")]
     if vis == ["this"]:
         # bare-value stream: pretty-print the values themselves
         dt = schema["this"].dataType
-        return [_dump_pretty(r["this"], dt, 0) for r in df.collect()]
+        return [_dump_pretty(r["this"], dt, 0) for r in rows]
     miss_idx = None
     types_idx = None
     ns_shadow_idx: dict = {}
@@ -1463,7 +1463,7 @@ def df_to_zson_pretty(df: DataFrame) -> list[str]:
         if f.name.startswith("__zed_ns_"):
             ns_shadow_idx[f.name[len("__zed_ns_"):]] = i
     out = []
-    for row in df.collect():
+    for row in rows:
         missing = (
             {m for m in (row[miss_idx] or []) if "\x00" not in m}
             if miss_idx is not None
@@ -1522,13 +1522,17 @@ _DECORATE = {
 
 
 def df_to_zson_lines(df: DataFrame):
-    """RDD[str]: one ZSON record per row (distributed; schema-driven).
+    """RDD[str]: one ZSON record per row (distributed; schema-driven)."""
+    return df.rdd.map(zson_line_renderer(df.schema))
+
+
+def zson_line_renderer(schema):
+    """row → its ZSON record line, for rows of `schema`.
 
     Honors the per-row presence sidecar: fields whose dotted path
     appears in a row's `__zed_missing` list were ABSENT in the input
     record (vs present-but-null) and are omitted from the rendering,
     matching the reference zsonio writer on mixed-shape streams."""
-    schema = df.schema
     miss_idx = None
     fields = list(schema.fields)
     ns_shadow_idx: dict = {}
@@ -1571,7 +1575,7 @@ def df_to_zson_lines(df: DataFrame):
             parts.append(f"{_quote_name(f.name)}:{val}")
         return "{" + ",".join(parts) + "}"
 
-    return df.rdd.map(render)
+    return render
 
 
 def write_zson(df: DataFrame, path: str, single_file: bool = False) -> None:
