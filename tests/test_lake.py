@@ -515,3 +515,170 @@ def test_ordered_scan_tiebreak_follows_the_sort(spark, lake):
         plan = _plan(spark, lake.root, text)
         assert "Window" in plan and "ArrowEvalPython" in plan, plan
         assert "Union" not in plan and plan.count("FileScan") == 1, plan
+
+
+# --- scans plan from the commit journal --------------------------------
+
+# two commits per shape, the second with a different shape where the
+# shape allows: uniform ndjson, mixed shapes (__zed_missing), keyless
+# rows (__zed_seq), ns-exact times (__zed_ns_*), nested records,
+# arrays and maps
+_SHAPES = {
+    "ndjson": ["ndjson", "ndjson"],
+    "mixed": [_ZSON_ROWS, '{k:9,w:"x"}\n{k:8}'],
+    "keyless": [_ZSON_KEYLESS, '{s:"d",y:true}'],
+    "ns": [
+        "{k:1,t:2020-01-01T00:00:00.123456789Z}",
+        "{k:2,t:2020-01-01T00:00:01Z,u:2020-01-01T00:00:00.000000001Z}",
+    ],
+    "nested": [
+        '{k:1,r:{a:1,b:[1,2]},m:|{"x":1}|}\n{k:2,r:{a:2,b:[3]},m:|{"y":2}|}',
+        '{k:3,r:{a:3,c:"s"},arr:[{p:1}]}',
+    ],
+}
+_NDJSON = '{"k":1,"s":"a","v":1.5}\n{"k":1,"s":"b","v":2.5}\n{"k":2,"s":"c","v":0.5}\n'
+
+
+def _ksuids(monkeypatch, reverse=False):
+    """New objects get ids that sort in commit order (the order a
+    mergeSchema footer read follows), or against it."""
+    import zed_spark.sources.lake as lk
+    from zed_spark.functions.misc import ksuid_encode_bytes
+
+    seq = iter(range(1, 1000))
+
+    def next_id():
+        i = next(seq)
+        return ksuid_encode_bytes((1000 - i if reverse else i).to_bytes(20, "big"))
+
+    monkeypatch.setattr(lk, "new_ksuid", next_id)
+
+
+def _load_shape(pool, tmp_path, batch):
+    if batch == "ndjson":
+        p = tmp_path / f"batch{len(pool.commits())}.json"
+        p.write_text(_NDJSON)
+        pool.load(pool.spark.read.json(str(p)))
+    else:
+        _load_zson(pool, batch)
+
+
+def _jobs(spark, fn):
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup() or [])
+    fn()
+    return len(set(sc.statusTracker().getJobIdsForGroup() or []) - before)
+
+
+def _sorted_rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _footer_merge(pool):
+    paths = [os.path.join(pool.cfg.path, o) for o in pool._live_objects()]
+    return pool.spark.read.option("mergeSchema", "true").parquet(*paths)
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_scan_schema_is_the_footer_merge(spark, lake, tmp_path, monkeypatch, shape):
+    """The merge of the schemas the commits recorded is the schema a
+    mergeSchema footer read infers, the rows read under it are the
+    same, and planning a scan, ordered or not, runs no Spark job."""
+    from pyspark.sql import types as T
+
+    from zed_spark.sources.lake import _merge_schemas
+
+    _ksuids(monkeypatch)
+    pool = lake.create_pool(shape, key="k", order="asc")
+    for batch in _SHAPES[shape]:
+        _load_shape(pool, tmp_path, batch)
+    footer = _footer_merge(pool)
+    recorded = [T.StructType.fromJson(c["schema"]) for c in pool.commits()]
+    assert _merge_schemas(spark, recorded) == footer.schema
+    got = pool._read_objects(pool._live_objects(), pool._commit_index())
+    assert got.schema == footer.schema
+    assert _sorted_rows(got) == _sorted_rows(footer)
+    if shape == "keyless":
+        assert "__zed_seq" in got.columns
+    if shape in ("mixed", "ns"):
+        assert {"__zed_missing", "__zed_ns_t"} & set(got.columns)
+    assert _jobs(spark, lambda: pool.scan()) == 0
+    assert _jobs(spark, lambda: lake.scan_ref(shape)) == 0
+
+
+def test_conflicting_types_raise_the_footer_merge_error(spark, lake, monkeypatch):
+    from py4j.protocol import Py4JJavaError
+
+    _ksuids(monkeypatch)
+    pool = lake.create_pool("clash", key="k")
+    _load_zson(pool, "{k:1,v:1}")
+    _load_zson(pool, '{k:2,v:"s"}')
+    with pytest.raises(Py4JJavaError) as old:
+        _footer_merge(pool)
+    with pytest.raises(Py4JJavaError) as new:
+        pool.scan()
+    msg = new.value.java_exception.getMessage()
+    assert "CANNOT_MERGE_SCHEMAS" in msg
+    assert msg == old.value.java_exception.getMessage()
+
+
+def test_legacy_pool_scans_from_footers(spark, lake, tmp_path, monkeypatch):
+    """Commits written before commits recorded schemas: each object's
+    schema comes from its own footer (one job each), and the scan is
+    the one the recorded schemas give."""
+    import json
+
+    _ksuids(monkeypatch, reverse=True)
+    pool = lake.create_pool("legacy_schema", key="k", order="asc")
+    for batch in _SHAPES["mixed"]:
+        _load_shape(pool, tmp_path, batch)
+    want = pool.scan(ordered=True)
+    want_cols, want_rows = want.columns, _rows(want)
+    log = pool._log_path()
+    entries = [json.loads(ln) for ln in open(log) if ln.strip()]
+    for e in entries:
+        e.pop("schema")
+    with open(log, "w") as fh:
+        fh.writelines(json.dumps(e) + "\n" for e in entries)
+    holder = {}
+    assert _jobs(spark, lambda: holder.update(df=pool.scan(ordered=True))) == 2
+    assert holder["df"].columns == want_cols
+    assert _rows(holder["df"]) == want_rows
+
+
+def test_scan_columns_follow_commit_order(spark, lake, monkeypatch):
+    """Two shapes whose object ids sort against commit order: the
+    scan's columns still come in commit order (a footer merge
+    follows the ids)."""
+    _ksuids(monkeypatch, reverse=True)
+    pool = lake.create_pool("colorder", key="k", order="asc")
+    _load_zson(pool, "{k:1,a:1}")
+    _load_zson(pool, '{k:2,b:"x"}')
+    assert _footer_merge(pool).columns == ["k", "b", "a"]
+    assert pool.scan().columns == ["k", "a", "b"]
+    assert lake.scan_ref("colorder").columns == ["k", "a", "b"]
+
+
+def test_rewrites_record_stats_and_schema(spark, lake, monkeypatch):
+    """delete_where and compact() record the rewritten object's key
+    stats (the same a fresh load of its rows records) and its schema,
+    so a later ordered scan plans no probe job."""
+    _ksuids(monkeypatch)
+    pool = lake.create_pool("rewrite", key="k", order="asc")
+    _load_zson(pool, _ZSON_ROWS)
+    _load_zson(pool, _ZSON_ROWS)
+    for i, rewrite in enumerate((
+        lambda: pool.delete_where(F.col("s") == "z"),
+        lambda: pool.compact(),
+    )):
+        rewrite()
+        entry = pool.commits()[-1]
+        assert "schema" in entry
+        assert _jobs(spark, lambda: pool.scan(ordered=True)) == 0
+        fresh = lake.create_pool(f"fresh{i}", key="k", order="asc")
+        fresh.load(pool.scan(keep_internal=True))
+        assert entry["stats"] == fresh.commits()[-1]["stats"]
+        cols = ["min", "max", "count"]
+        assert _rows(pool.meta_objects().select(cols)) == _rows(
+            fresh.meta_objects().select(cols)
+        )

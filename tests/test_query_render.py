@@ -170,9 +170,10 @@ def _jobs(sc, fn):
 
 @pytest.mark.parametrize("text", ["from asc", "from uni | count() by k"])
 def test_served_query_runs_one_execution(svc, spark, text):
-    """One zjson /query = the scan's footer job + the jobs of ONE
-    collect of the same plan: truncation, the QueryStats frame and
-    the renderer all read one materialized result."""
+    """One zjson /query = the jobs of ONE collect of the same plan:
+    the pool scan plans from the commit journal (no footer job), and
+    truncation, the QueryStats frame and the renderer all read one
+    materialized result."""
     from zed_spark.session import ZedSession
 
     sc = spark.sparkContext
@@ -187,14 +188,14 @@ def test_served_query_runs_one_execution(svc, spark, text):
     serve()  # warm the plan caches
     served = _jobs(sc, serve)
     holder = {}
-    footer = _jobs(sc, lambda: holder.update(
+    planning = _jobs(sc, lambda: holder.update(
         df=ZedSession(spark).query(
             text, allow_paths=False, lake=svc.lake_root
         ).df
     ))
     collect = _jobs(sc, lambda: holder["df"].limit(MAX_ROWS + 1).collect())
-    assert footer == 1
-    assert served == footer + collect, (served, footer, collect)
+    assert planning == 0
+    assert served == collect, (served, planning, collect)
 
 
 if __name__ == "__main__":

@@ -68,10 +68,39 @@ def test_shape_groups_repeated_reads_bounded(spark, tmp_path):
     assert _persistent_rdd_count(spark) <= base
 
 
-def test_duplicated_spans_join_form_equals_window_form(spark, monkeypatch):
-    """The round-12 two-level-count + semi-join span detection is
-    output-identical to the round-11 window form (the skew-safe plan
-    must not change what the operator computes)."""
+def _spans_oracle(rows, n, min_count):
+    """Maximal duplicated spans in pure Python: normalize each text,
+    count every n-token window corpus-wide, merge consecutive
+    positions whose window occurs >= min_count times into spans, and
+    cut those spans' tokens out of the text."""
+    from collections import Counter
+
+    words = {i: " ".join(t.lower().split()).split(" ") for i, t in rows}
+    grams = {
+        i: [tuple(w[p:p + n]) for p in range(len(w) - n + 1)]
+        for i, w in words.items()
+    }
+    count = Counter(g for gs in grams.values() for g in gs)
+    spans, stripped = set(), set()
+    for i, gs in grams.items():
+        hit = [p for p, g in enumerate(gs) if count[g] >= min_count]
+        runs = []
+        for p in hit:
+            if runs and p == runs[-1][1] + 1:
+                runs[-1][1] = p
+            else:
+                runs.append([p, p])
+        spans |= {(i, a, b + n - 1, b - a + n) for a, b in runs}
+        cut = {t for a, b in runs for t in range(a, b + n)}
+        kept = [w for t, w in enumerate(words[i]) if t not in cut]
+        stripped.add((i, " ".join(kept)))
+    return spans, stripped
+
+
+def test_duplicated_spans_match_python_oracle(spark):
+    """The two-level-count + semi-join span detection (and the strip
+    built on it) computes exactly the maximal duplicated spans of a
+    direct pure-Python count."""
     from zed_spark.textops import spans as sp
 
     rows = [
@@ -82,32 +111,21 @@ def test_duplicated_spans_join_form_equals_window_form(spark, monkeypatch):
         (5, ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def run(form: str):
-        monkeypatch.setenv("SPARK_GRAFT_SPANS_COUNT", form)
-        out = sp.duplicated_spans(df, n=3, min_count=2)
-        return {tuple(r) for r in out.collect()}
-
-    assert run("join") == run("window")
-    assert len(run("join")) > 0
-
-    # strip path inherits the same detection
-    def strip(form: str):
-        monkeypatch.setenv("SPARK_GRAFT_SPANS_COUNT", form)
-        out = sp.strip_duplicated_spans(df, n=3, min_count=2)
-        return {tuple(r) for r in out.collect()}
-
-    assert strip("join") == strip("window")
+    want_spans, want_strip = _spans_oracle(rows, n=3, min_count=2)
+    got = sp.duplicated_spans(df, n=3, min_count=2)
+    assert {tuple(r) for r in got.collect()} == want_spans
+    assert len(want_spans) > 0
+    got = sp.strip_duplicated_spans(df, n=3, min_count=2)
+    assert {tuple(r) for r in got.collect()} == want_strip
 
 
-def test_duplicated_spans_join_form_plan_shape(spark, monkeypatch):
+def test_duplicated_spans_join_form_plan_shape(spark):
     """Scale pin (round-11 VERDICT item 4): the gram count must run a
     PARTIAL aggregation before its exchange (hot grams collapse
     map-side) and attach back via a join — window-over-gh, which gets
-    no AQE skew handling, must be gone from the default plan."""
+    no AQE skew handling, must stay out of the plan."""
     from zed_spark.textops import spans as sp
 
-    monkeypatch.delenv("SPARK_GRAFT_SPANS_COUNT", raising=False)
     df = spark.createDataFrame(
         [(i, "a b c d e f") for i in range(10)], "doc_id long, text string"
     )

@@ -221,6 +221,54 @@ def _zcode_tiebreak(df: DataFrame, collides=None):
     return encode(row if collides is None else F.when(collides, row))
 
 
+def _nullable(dt):
+    """`dt` with every field, array element and map value nullable:
+    the schema Spark's file sources read a written frame back as
+    (StructType.asNullable)."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _merge_schemas(spark: SparkSession, schemas: list):
+    """Fold object schemas left to right with Spark's own
+    StructType.merge: the widening, and the CANNOT_MERGE_SCHEMAS
+    error, of a mergeSchema footer read, but in the order given
+    rather than in object-path (random ksuid) order.  Equal schemas,
+    the common case, merge without a JVM call."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    merged = schemas[0]
+    if all(s == merged for s in schemas[1:]):
+        return merged
+    jvm = spark._jvm
+    parse = jvm.org.apache.spark.sql.types.DataType.fromJson
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    jmerged = parse(merged.json())
+    for s in schemas[1:]:
+        right = parse(s.json())
+        try:
+            jmerged = jmerged.merge(right, case_sensitive)
+        except Py4JJavaError as e:
+            # the footer merge's own wrapping (mergeSchemasInParallel)
+            err = jvm.org.apache.spark.sql.errors.QueryExecutionErrors
+            raise Py4JJavaError(
+                "merging data object schemas",
+                err.failedMergingSchemaError(jmerged, right, e.java_exception),
+            ) from None
+    return _parse_datatype_json_string(jmerged.json())
+
+
 def _notify_commit(event: dict) -> None:
     for fn in list(_COMMIT_LISTENERS):
         try:
@@ -577,7 +625,10 @@ class Pool:
         return new_id
 
     # --- load (write a commit) --------------------------------------
-    def _write_object(self, df: DataFrame, commit_id: str) -> None:
+    def _write_object(self, df: DataFrame, commit_id: str) -> dict:
+        """Write `df` as data object obj_<commit_id> and return the
+        written frame's schema as its commit records it: nullable,
+        the way Spark reads it back, so a scan needs no footer."""
         obj_dir = fsio.join(self.cfg.path, f"obj_{commit_id}")
         if "__zed_seq" in df.columns:
             # a recompacted object re-records its own sequence
@@ -591,17 +642,13 @@ class Pool:
             # monotonic per-row sequence rides in the object and the
             # ordered scan sorts on it (service/ztests/csv-error,
             # curl-load-line).
-            df.withColumn(
-                "__zed_seq", F.monotonically_increasing_id()
-            ).write.mode("overwrite").parquet(obj_dir)
-            return
-        n = max(df.rdd.getNumPartitions() // 4, 1)
-        (
-            df.repartitionByRange(n, F.col(self.cfg.key))
-            .sortWithinPartitions(self.cfg.key)
-            .write.mode("overwrite")
-            .parquet(obj_dir)
-        )
+            df = df.withColumn("__zed_seq", F.monotonically_increasing_id())
+        else:
+            n = max(df.rdd.getNumPartitions() // 4, 1)
+            key = F.col(self.cfg.key)
+            df = df.repartitionByRange(n, key).sortWithinPartitions(key)
+        df.write.mode("overwrite").parquet(obj_dir)
+        return _nullable(df.schema).jsonValue()
 
     def _key_stats(self, df: DataFrame) -> dict:
         """min/max/count of the pool key for a batch (the reference
@@ -673,7 +720,7 @@ class Pool:
         return v
 
     def _key_dups_from_stats(
-        self, objs, commits: list[dict] | None = None
+        self, objs, by_id: dict[str, dict] | None = None
     ) -> bool | None:
         """Plan-time key-collision answer from import-time stats
         (round-8 verdict item 6): True/False when every live object
@@ -681,15 +728,12 @@ class Pool:
         (caller falls back to the one-row groupBy probe).  Collisions
         exist when any object saw internal dups, null keys may meet
         across objects, or two objects' key ranges touch."""
-        by_obj = {
-            obj: c.get("stats", {})
-            for c in (self.commits() if commits is None else commits)
-            for obj in c.get("add", [])
-        }
+        if by_id is None:
+            by_id = self._commit_index()
         ranges = []
         total_nulls = 0
         for o in objs:
-            st = by_obj.get(o)
+            st = self._object_commit(o, by_id).get("stats")
             if not st or "key_dups" not in st:
                 return None
             if st["key_dups"]:
@@ -730,14 +774,7 @@ class Pool:
         seek-index object pruning). `meta` is the reference's -meta
         app metadata, carried on the commit and exposed by `:log`."""
         commit_id = new_ksuid()
-        self._write_object(df, commit_id)
-        if self.cfg.seekstride != 65536:
-            # seek files only for explicitly-strided pools: parquet
-            # footer stats are this engine's pruning index, so the
-            # reference-layout seek file is CLI/ztest parity, and its
-            # driver-side collect must never ride a default-config
-            # (scale-path) load
-            self._write_seek_index(commit_id)
+        schema = self._write_object(df, commit_id)
         stats = self._key_stats(df)
         # an empty message means the reference's auto load message
         # (lake/branch.go loadMessage); it embeds the object's exact
@@ -751,23 +788,60 @@ class Pool:
             "add": [f"obj_{commit_id}"],
             "remove": [],
             "stats": stats,
+            "schema": schema,
         }
         if meta is not None:
             entry["meta"] = meta
+        if self.cfg.seekstride != 65536:
+            # seek files only for explicitly-strided pools: parquet
+            # footer stats are this engine's pruning index, so the
+            # reference-layout seek file is CLI/ztest parity, and its
+            # driver-side collect must never ride a default-config
+            # (scale-path) load
+            self._write_seek_index(commit_id, {commit_id: entry})
         self._advance(branch, entry)
         return commit_id
 
     # --- scan --------------------------------------------------------
+    @staticmethod
+    def _object_commit(obj: str, by_id: dict[str, dict]) -> dict:
+        """The commit entry that wrote `obj` (an object is named by
+        its writing commit's id; merges and reverts only re-list it)."""
+        return by_id.get(obj.removeprefix("obj_"), {})
+
+    def _read_objects(self, objs: list[str], by_id: dict[str, dict]) -> DataFrame:
+        """Read data objects under the merge, in the order given, of
+        the schemas their commits recorded (lake/data/object.go: the
+        reference's journal carries each object's metadata too), so
+        planning opens no footer.  An object committed before commits
+        recorded schemas is read from its own footer: one Spark job."""
+        from pyspark.sql import types as T
+
+        paths = [fsio.join(self.cfg.path, o) for o in objs]
+        schemas = []
+        for o, path in zip(objs, paths):
+            rec = self._object_commit(o, by_id).get("schema")
+            schemas.append(
+                T.StructType.fromJson(rec) if rec is not None
+                else self.spark.read.parquet(path).schema
+            )
+        schema = _merge_schemas(self.spark, schemas)
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def scan(
         self,
         branch: str = "main",
         ordered: bool = False,
         keep_internal: bool = False,
-        schema=None,
     ) -> DataFrame:
         """PoolScan: read a branch's live objects. Filters pushed by
         the caller reach parquet row-group stats; because objects are
         key-sorted, key-range predicates skip whole files.
+
+        Planning reads no parquet footers: the schema is the merge of
+        the schemas each object's commit recorded, and its columns
+        follow commit order (first appearance along the branch's
+        commit chain).
 
         ordered=True reproduces the reference's key-ordered scan
         (asc/desc per the pool config; equal keys by the record's ZNG
@@ -793,19 +867,10 @@ class Pool:
             raise ValueError(f'"{branch}": branch not found')
         if not objs:
             raise ValueError(f"pool {self.cfg.name!r} is empty on branch {branch!r}")
-        paths = [fsio.join(self.cfg.path, o) for o in objs]
-        if schema is not None:
-            # caller knows the pool's shape (e.g. the signature store's
-            # fixed schema): skip the mergeSchema footer pass — a
-            # per-scan driver job that exists only to DISCOVER the
-            # schema (round-12, incremental_dedup fixed-cost cut)
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            # objects committed at different times may have different
-            # shapes (the reference's pools are heterogeneous): merge
-            # footer schemas so later columns appear instead of silently
-            # adopting the first file's schema
-            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        # objects committed at different times may have different
+        # shapes (the reference's pools are heterogeneous): later
+        # columns appear instead of the first object's schema winning
+        df = self._read_objects(objs, by_id)
         if not keep_internal:
             # ns-exact time shadows are lake-internal (size/stat
             # parity); the query layer sees µs timestamps only.
@@ -837,7 +902,7 @@ class Pool:
         # (zero jobs at plan time); the groupBy probe runs only for
         # legacy objects without the recorded bit.  Unique-key scans
         # plan no tiebreak at all.
-        has_dups = self._key_dups_from_stats(objs, commits)
+        has_dups = self._key_dups_from_stats(objs, by_id)
         if has_dups is None:
             has_dups = (
                 df.groupBy(self.cfg.key)
@@ -891,7 +956,7 @@ class Pool:
         predicate = F.coalesce(predicate.cast("boolean"), F.lit(False))
         kept = self.scan(branch, keep_internal=True).filter(~predicate)
         commit_id = new_ksuid()
-        self._write_object(kept, commit_id)
+        schema = self._write_object(kept, commit_id)
         self._advance(
             branch,
             {
@@ -901,6 +966,8 @@ class Pool:
                 "message": message,
                 "add": [f"obj_{commit_id}"],
                 "remove": old,
+                "stats": self._key_stats(kept),
+                "schema": schema,
             },
         )
         return commit_id
@@ -917,16 +984,16 @@ class Pool:
         object ksuids to merge). ids=None compacts everything."""
         if ids is None:
             return self.delete_where(F.lit(False), author, message, branch)
-        live = self._live_objects(branch)
-        drops = []
+        by_id = self._commit_index()
+        live = self._live_at(self._tip(branch), by_id)
         for a in ids:
             if f"obj_{a}" not in live:
                 raise ValueError(f"{a}: object not found")
-            drops.append(f"obj_{a}")
-        paths = [fsio.join(self.cfg.path, o) for o in drops]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        # commit order, like a scan of the same objects
+        drops = [o for o in live if o.removeprefix("obj_") in ids]
+        df = self._read_objects(drops, by_id)
         commit_id = new_ksuid()
-        self._write_object(df, commit_id)
+        schema = self._write_object(df, commit_id)
         stats = self._key_stats(df)
         self._advance(
             branch,
@@ -938,6 +1005,7 @@ class Pool:
                 "add": [f"obj_{commit_id}"],
                 "remove": drops,
                 "stats": stats,
+                "schema": schema,
             },
         )
         return commit_id
@@ -1034,7 +1102,9 @@ class Pool:
                         {"": "lake.BranchTip={name:string,commit:string}"},
                     )
                 )
-        for c in self.commits():
+        commits = self.commits()
+        by_id = self._commit_index(commits)
+        for c in commits:
             rows.append(
                 (
                     c["commit"],
@@ -1042,7 +1112,7 @@ class Pool:
                     datetime.fromtimestamp(float(c["ts"]), tz=timezone.utc),
                     c.get("author", ""),
                     c.get("message", "")
-                    or (self._load_message(c) if c.get("add") else ""),
+                    or (self._load_message(c, by_id) if c.get("add") else ""),
                     None if c.get("meta") is None else str(c["meta"]),
                     len(c.get("add", [])),
                     len(c.get("remove", [])),
@@ -1081,7 +1151,7 @@ class Pool:
             rows, "branch string, tip string, base string, n_commits int, n_objects int"
         )
 
-    def _write_seek_index(self, commit_id: str) -> None:
+    def _write_seek_index(self, commit_id: str, by_id: dict[str, dict]) -> None:
         """Per-object seek index (lake/data/writer.go writeIndex +
         lake/seekindex): walking the object's rows in pool order, the
         stride trigger accumulates each KEY's encoded byte length;
@@ -1094,8 +1164,7 @@ class Pool:
         from zed_spark.sources.zng import _encode_body, encode_zng
 
         key = self.cfg.key
-        obj_dir = fsio.join(self.cfg.path, f"obj_{commit_id}")
-        rows, enc_schema = self._ordered_object_rows(obj_dir)
+        rows, enc_schema = self._ordered_object_rows(f"obj_{commit_id}", by_id)
         if not rows or key not in enc_schema.fieldNames():
             return
         kdt = enc_schema[key].dataType
@@ -1153,13 +1222,13 @@ class Pool:
             encode_zng(entries, eschema, compress=True),
         )
 
-    def _ordered_object_rows(self, obj_dir: str):
+    def _ordered_object_rows(self, obj: str, by_id: dict[str, dict]):
         """An object's rows in pool order with ns shadows restored —
         the exact sequence the reference writer streams (see
         _object_size for the ordering contract)."""
         from zed_spark.sources.zng import _encode_body
 
-        odf = self.spark.read.parquet(obj_dir)
+        odf = self._read_objects([obj], by_id)
         drop = [c for c in odf.columns if c == "__zed_seq"]
         odf = odf.drop(*drop) if drop else odf
         shadows = {
@@ -1195,7 +1264,7 @@ class Pool:
             rows.sort(key=sort_key)
         return rows, enc_schema
 
-    def _object_size(self, obj_dir: str) -> int:
+    def _object_size(self, obj: str, by_id: dict[str, dict]) -> int:
         """The object's ZNG stream byte count, matching the
         reference's writer EXACTLY (lake/data/writer.go via
         zio/zngio/writer.go): rows in pool order (key in the pool
@@ -1206,7 +1275,7 @@ class Pool:
         Meta queries only — the scan path never pays this collect."""
         from zed_spark.sources.zng import encode_zng
 
-        rows, enc_schema = self._ordered_object_rows(obj_dir)
+        rows, enc_schema = self._ordered_object_rows(obj, by_id)
         return len(encode_zng(rows, enc_schema, compress=True))
 
     def pool_stats(self, branch: str = "main") -> dict:
@@ -1215,19 +1284,15 @@ class Pool:
         when available (span.dur = max - min + 1ns, nano.Span)."""
         from datetime import datetime
 
-        by_obj = {
-            obj: c.get("stats", {})
-            for c in self.commits()
-            for obj in c.get("add", [])
-        }
+        by_id = self._commit_index()
         size = 0
         mn_ns = mx_ns = None
         for obj in self._live_objects(branch):
             try:
-                size += self._object_size(fsio.join(self.cfg.path, obj))
+                size += self._object_size(obj, by_id)
             except Exception:
                 pass
-            st = by_obj.get(obj, {})
+            st = self._object_commit(obj, by_id).get("stats", {})
 
             def to_ns(v):
                 if isinstance(v, dict) and v.get("t") == "time":
@@ -1247,7 +1312,7 @@ class Pool:
                 mx_ns = hi if mx_ns is None else max(mx_ns, hi)
         return {"size": size, "min_ns": mn_ns, "max_ns": mx_ns}
 
-    def _load_message(self, e: dict) -> str:
+    def _load_message(self, e: dict, by_id: dict[str, dict]) -> str:
         """The reference's auto-generated load commit message
         (lake/branch.go loadMessage + data/object.go:91), synthesized
         lazily so loads never pay the exact-size collect."""
@@ -1257,7 +1322,7 @@ class Pool:
         cnt = (e.get("stats") or {}).get("count", 0)
         for o in adds:
             try:
-                size = self._object_size(fsio.join(self.cfg.path, o))
+                size = self._object_size(o, by_id)
             except Exception:
                 size = 0
             plural = "" if cnt == 1 else "s"
@@ -1310,7 +1375,7 @@ class Pool:
             lines.append("")
             msg = e.get("message") or ""
             if not msg and e.get("add"):
-                msg = self._load_message(e)
+                msg = self._load_message(e, idx)
             if msg:
                 for ln in msg.splitlines():
                     lines.append(f"    {ln.strip()}" if ln.strip() else "")
@@ -1332,11 +1397,7 @@ class Pool:
                 return datetime.fromisoformat(v["v"])
             return v
 
-        stats = {
-            obj: c.get("stats", {})
-            for c in self.commits()
-            for obj in c.get("add", [])
-        }
+        by_id = self._commit_index()
         rows = []
         for obj in self._live_objects(branch):
             d = fsio.join(self.cfg.path, obj)
@@ -1345,14 +1406,14 @@ class Pool:
             # so re-encode — meta queries only, the scan path never
             # pays this (lake/ztests/meta: size 18 for two int rows)
             try:
-                size = self._object_size(d)
+                size = self._object_size(obj, by_id)
             except Exception:
                 size = sum(
                     fsio.getsize(fsio.join(d, f))
                     for f in fsio.listdir(d)
                     if f.endswith(".parquet")
                 )
-            st = stats.get(obj, {})
+            st = self._object_commit(obj, by_id).get("stats", {})
             from zed_spark.functions.misc import ksuid_decode_str
 
             # the reference's object id is a raw 20-byte ksuid

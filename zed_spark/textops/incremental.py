@@ -48,10 +48,6 @@ from zed_spark.textops.minhash import (
     shingle_base,
 )
 
-SIGNATURE_SCHEMA = (
-    "__h string, min_id long, minhashes array<long>, hashset array<long>, comp long"
-)
-
 
 def _text_signatures(
     df: DataFrame,
@@ -152,9 +148,7 @@ def write_signatures(lake, pool_name: str, sigs: DataFrame) -> str:
 
 
 def read_signatures(lake, pool_name: str) -> DataFrame:
-    # the signature store has a FIXED schema, so the scan skips the
-    # mergeSchema footer pass (a per-invocation schema-discovery job)
-    return lake.pool(pool_name).scan(schema=SIGNATURE_SCHEMA)
+    return lake.pool(pool_name).scan()
 
 
 def _bands_of_array(num_hashes: int, bands: int):

@@ -118,41 +118,24 @@ def duplicated_spans(
     # grams, at ~1e-19 per pair — the oracle's exact-output compare
     # would catch it
     pg = _positional_gram_hashes(df, n=n, text_col=text_col, id_col=id_col)
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SPANS_COUNT", "join") == "window":
-        # round-11 form: corpus-wide count per gram as a window over
-        # the gram hash — ONE text scan, ONE shuffle of (id, pos, gh).
-        # Scale flaw (round-11 VERDICT item 4): every occurrence of a
-        # hot gram (license headers, navbars) lands in ONE window
-        # task, and window execs get no AQE skew mitigation. Kept
-        # behind the env switch for A/B only.
-        hits = (
-            pg.withColumn(
-                "cnt", F.count(F.lit(1)).over(Window.partitionBy("gh"))
-            )
-            .where(F.col("cnt") >= min_count)
-            .select(id_col, "pos")
-        )
-    else:
-        # round-12 default: TWO-LEVEL count + semi-join. The groupBy
-        # runs a partial aggregation map-side, so a hot gram's
-        # occurrences collapse to one (gh, partial count) row per map
-        # partition before the shuffle — the wide shuffle carries
-        # distinct grams, not positions. Attaching the duplicated-gram
-        # set back to positions is a LEFT SEMI join, which AQE can
-        # broadcast when the set is small and skew-split when it is
-        # not (joins get runtime skew handling; window execs do not).
-        # Costs one extra evaluation of the gram pipeline (integer
-        # multiply-adds over the staged word hashes — no gram strings,
-        # unlike the round-10 form this supersedes).
-        dup = (
-            pg.groupBy("gh")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .where(F.col("__c") >= min_count)
-            .select("gh")
-        )
-        hits = pg.join(dup, "gh", "left_semi").select(id_col, "pos")
+    # TWO-LEVEL count + semi-join. The groupBy runs a partial
+    # aggregation map-side, so a hot gram's occurrences collapse to one
+    # (gh, partial count) row per map partition before the shuffle —
+    # the wide shuffle carries distinct grams, not positions. Attaching
+    # the duplicated-gram set back to positions is a LEFT SEMI join,
+    # which AQE can broadcast when the set is small and skew-split when
+    # it is not (joins get runtime skew handling; a window over the
+    # gram hash would put every occurrence of a hot gram in one task,
+    # and window execs get no skew mitigation). Costs one extra
+    # evaluation of the gram pipeline (integer multiply-adds over the
+    # staged word hashes — no gram strings).
+    dup = (
+        pg.groupBy("gh")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .where(F.col("__c") >= min_count)
+        .select("gh")
+    )
+    hits = pg.join(dup, "gh", "left_semi").select(id_col, "pos")
     w = Window.partitionBy(id_col).orderBy("pos")
     islands = hits.withColumn(
         "brk",
