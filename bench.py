@@ -188,18 +188,21 @@ def _parallel_calibration_run(spark) -> float:
 
     The serial key above is dominated by fixed scheduling cost, so it
     under-corrects multi-core contention: background load inflates the
-    32-core battery while the serial key barely moves (r9 driver run:
-    battery +22% vs quiet re-run, calibration flat). This key saturates
-    all 32 cores with ~1.5 s of pure codegen compute (3.2B triple-
-    xxhash64 + partial-agg sum, no shuffle, no data), so ambient
-    multi-core load inflates it by the same factor it inflates the
-    battery. `total_per_parallel_calibration` is the round-over-round
-    regression gate; the serial key stays for single-core drift."""
+    battery while the serial key barely moves (r9 driver run: battery
+    +22% vs quiet re-run, calibration flat). This key saturates every
+    core the session gets with pure codegen compute (100M triple-
+    xxhash64 rows per core + partial-agg sum, no shuffle, no data), so
+    ambient multi-core load inflates it by the same factor it inflates
+    the battery. `total_per_parallel_calibration` is the round-over-
+    round regression gate; the serial key stays for single-core drift."""
     from pyspark.sql import functions as F
 
+    from zed_spark.session import default_parallelism
+
+    cores = default_parallelism()
     t0 = time.perf_counter()
     (
-        spark.range(0, 3_200_000_000, 1, 32)
+        spark.range(0, 100_000_000 * cores, 1, cores)
         .select(
             F.sum(F.xxhash64(F.xxhash64(F.xxhash64("id")))).alias("s")
         )

@@ -175,19 +175,20 @@ def test_check_from_no_space_around_pipe(svc, spark, tmp_path_factory):
 def test_load_zson_keyword_scalars(svc, spark):
     """`true`/`false`/`null` bodies are valid ZSON scalars, not
     prose — auto-detect must accept them (advice r8)."""
-    from zed_spark.service import QueryService
+    from zed_spark.service import QueryService, _Scratch
 
     s = QueryService(spark, sf_dir=SF_DIR)
-    df = s._load_body(b"true\nfalse\ntrue\n", "", {})
-    vals = [r[df.columns[0]] for r in df.collect()]
+    with _Scratch("svc_load_") as tmp:
+        df = s._load_body(b"true\nfalse\ntrue\n", "", {}, tmp)
+        vals = [r[df.columns[0]] for r in df.collect()]
     assert sorted(vals) == [False, True, True]
     # bare prose still produces the detector report
     import pytest as _pt
 
     from zed_spark.service import ApiError
 
-    with _pt.raises(ApiError):
-        s._load_body(b"hello world prose\n", "", {})
+    with _pt.raises(ApiError), _Scratch("svc_load_") as tmp:
+        s._load_body(b"hello world prose\n", "", {}, tmp)
 
 
 def test_render_unknown_failure_reraises(svc, spark):
@@ -536,3 +537,44 @@ def test_service_on_file_uri_lake_root(spark, tmp_path_factory):
         assert [r["a"] for r in rows] == [1, 2]
     finally:
         s.stop()
+
+
+def test_requests_leave_no_temp_dirs(spark, tmp_path, monkeypatch):
+    """Loads and arrows/parquet responses write their files under a
+    temp dir that is gone once the commit or the response is done;
+    a ZSON load writes no file at all."""
+    import tempfile
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setenv("TMPDIR", str(scratch))
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    s = QueryService(spark, lake_root=str(tmp_path / "lake"))
+
+    def api(method, path, body, accept="application/json", ctype=""):
+        return s.handle_api(
+            method, path, {}, {"accept": accept, "content-type": ctype}, body
+        )
+
+    for name in ("p", "c"):
+        api("POST", "/pool", json.dumps({"name": name}).encode())
+    n = 2
+    for i in range(n):
+        api("POST", "/pool/p/branch/main", f"{{ts:{i},v:{i}}}".encode())
+        api("POST", "/pool/c/branch/main", f"ts,v\n{i},{i}\n".encode(),
+            ctype="text/csv")
+        for accept in ("application/x-parquet",
+                       "application/vnd.apache.arrow.stream"):
+            code, _, payload, *_ = api(
+                "POST", "/query",
+                json.dumps({"query": "from p | count()"}).encode(), accept,
+            )
+            assert code == 200 and payload
+    assert list(scratch.iterdir()) == []
+    for name in ("p", "c"):
+        code, _, payload, *_ = api(
+            "POST", "/query",
+            json.dumps({"query": f"from {name} | count()"}).encode(),
+            "application/x-ndjson",
+        )
+        assert json.loads(payload) == n

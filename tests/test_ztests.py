@@ -373,11 +373,25 @@ def _load(path: str) -> dict:
 
 
 from zed_spark.sources.ingest import (  # promoted to product code r9
+    _SUB_US,
     missing_paths as _missing_paths,
-    ns_shadows_of as _ns_shadows,
+    ns_shadows as _ns_shadows_of_rows,
     to_df as _to_df,
     type_maps as _type_maps,
 )
+
+
+def _ns_shadows(blob, vals):
+    """ns shadows of a ZSON blob's top-level time fields (None for
+    binary blobs or inputs without sub-µs times)."""
+    if not (isinstance(blob, str) and _SUB_US.search(blob)):
+        return None
+    from zed_spark.sources.zson import parse_zson_full
+
+    try:
+        return _ns_shadows_of_rows(vals, parse_zson_full(blob, track_ns=True).ns_rows)
+    except Exception:
+        return None
 
 
 # type-value strings compare under the engine's documented widening
@@ -742,7 +756,7 @@ def _run_db_script_case(spark, case: dict, path: str, root: str | None = None):
 
     from zed_spark.lang.compiler import compile_query
     from zed_spark.sources.lake import Lake, new_ksuid
-    from zed_spark.sources.zson import parse_zson, parse_zson_typed
+    from zed_spark.sources.zson import parse_zson
 
     files = _case_files(case, path)
     outs: dict = {}
@@ -832,20 +846,15 @@ def _run_db_script_case(spark, case: dict, path: str, root: str | None = None):
                 return (
                     vv, {}, [parse_type_string(t) for t in tss], {}
                 )
-        vals, named = (
-            parse_zson_typed(blob)
-            if isinstance(blob, str)
-            else (__import__("zed_spark.sources.zng", fromlist=["parse_zng"]).parse_zng(blob), {})
-        )
-        descs = None
         nd: dict = {}
         if isinstance(blob, str):
-            try:
-                from zed_spark.sources.ztypes import parse_types
+            from zed_spark.sources.zson import parse_zson_full
 
-                descs = parse_types(blob, nd)
-            except Exception:
-                descs = None
+            vals, named, descs, _ = parse_zson_full(blob, named_descs=nd)
+        else:
+            from zed_spark.sources.zng import parse_zng
+
+            vals, named, descs = parse_zng(blob), {}, None
         return vals, named, descs, nd
 
     def df_of(blob):
@@ -2588,7 +2597,7 @@ def _run_script_case(spark, case: dict, path: str):
     ):
         _run_db_script_case(spark, case, path, root=case.get("__lake_root"))
         return
-    from zed_spark.sources.zson import parse_zson_typed as _pzt
+    from zed_spark.sources.zson import parse_zson_full as _pzf
 
     files = {}
     for i in case.get("inputs", []):
@@ -2603,20 +2612,13 @@ def _run_script_case(spark, case: dict, path: str):
     named: dict = {}
     named_descs: dict = {}
     for blob in [case.get("input", "")] + list(files.values()):
+        # named types, and their DESCRIPTORS (ztypes registry) so
+        # quoted named refs (<"@foo">) resolve to per-row identity
+        # (compiler/ztests/quoted-type)
         try:
-            named.update(_pzt(blob)[1])
+            named.update(_pzf(blob, named_descs=named_descs).named)
         except Exception:
             pass
-        if isinstance(blob, str):
-            # named-type DESCRIPTORS (ztypes registry) so quoted
-            # named refs (<"@foo">) resolve to per-row identity
-            # (compiler/ztests/quoted-type)
-            try:
-                from zed_spark.sources.ztypes import parse_types as _ptd
-
-                _ptd(blob, named_descs)
-            except Exception:
-                pass
     outs = {}
     out_res2: dict = {}
     for o in case.get("outputs", []):
@@ -2739,13 +2741,7 @@ def _run_script_case(spark, case: dict, path: str):
             # blocks carry their fixtures via echo — typename.md's
             # `80(port=int16)` must resolve typename("port"))
             try:
-                named.update(_pzt(echo_text)[1])
-            except Exception:
-                pass
-            try:
-                from zed_spark.sources.ztypes import parse_types as _ptd2
-
-                _ptd2(echo_text, named_descs)
+                named.update(_pzf(echo_text, named_descs=named_descs).named)
             except Exception:
                 pass
 
@@ -2815,7 +2811,9 @@ def _run_script_case(spark, case: dict, path: str):
                         while pos4 < len(t4) and t4[pos4] in " \n\r\t":
                             pos4 += 1
                     return vals4, None
-                vals = parse_zson(data)
+                from zed_spark.sources.zson import parse_zson_full
+
+                vals, _n, descs, _r = parse_zson_full(data)
                 if (
                     ifmt is None
                     and vals
@@ -2831,13 +2829,6 @@ def _run_script_case(spark, case: dict, path: str):
                     # (query/ztests/stop-on-error; the lenient ZSON
                     # token rule is for enum/ip literals only)
                     raise ValueError("format detection error")
-                descs = None
-                try:
-                    from zed_spark.sources.ztypes import parse_types
-
-                    descs = parse_types(data, {})
-                except Exception:
-                    descs = None
                 if descs is not None and len(descs) != len(vals):
                     descs = None
                 return vals, descs
@@ -3243,7 +3234,7 @@ def _run_script_case(spark, case: dict, path: str):
 
 def _run_case(spark, path: str):
     from zed_spark.lang.compiler import compile_query
-    from zed_spark.sources.zson import parse_zson, parse_zson_typed
+    from zed_spark.sources.zson import parse_zson
 
     case = _load(path)
     if case.get("skip"):
@@ -3380,14 +3371,12 @@ def _run_case(spark, path: str):
             any(f in flags for f in ("-f zeek", "-f csv", "-f text", "-f json"))
             and _re.search(r"\d{2}:\d{2}:\d{2}\.\d{7,}", case["input"])
         )
-        in_vals, named = parse_zson_typed(case["input"], time_ns=time_ns)
-        try:
-            from zed_spark.sources.ztypes import parse_types
+        from zed_spark.sources.zson import parse_zson_full
 
-            named_descs = {}
-            tdescs = parse_types(case["input"], named_descs)
-        except Exception:
-            tdescs, named_descs = None, {}
+        named_descs = {}
+        in_vals, named, tdescs, _ = parse_zson_full(
+            case["input"], time_ns=time_ns, named_descs=named_descs
+        )
     if not in_vals:
         # empty input → empty output, no schema to resolve against
         assert parse_zson(case["output"]) == []

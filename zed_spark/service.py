@@ -16,8 +16,11 @@ server — API-parity surface.
 from __future__ import annotations
 
 import json
+import os
 import queue
 import re
+import shutil
+import tempfile
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -120,6 +123,27 @@ def _pick_accept(header: str, default: str) -> str:
         if mt in _MIME_FMT:
             return _MIME_FMT[mt]
     raise ApiError("could not find supported MIME type in Accept header")
+
+
+class _Scratch:
+    """A request's temp dir: made when the first file goes in, and
+    removed with everything in it when the `with` block ends."""
+
+    def __init__(self, prefix: str):
+        self.prefix = prefix
+        self.path: str | None = None
+
+    def file(self, name: str) -> str:
+        if self.path is None:
+            self.path = tempfile.mkdtemp(prefix=self.prefix)
+        return os.path.join(self.path, name)
+
+    def __enter__(self) -> "_Scratch":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self.path is not None:
+            shutil.rmtree(self.path, ignore_errors=True)
 
 
 class QueryService:
@@ -365,22 +389,20 @@ class QueryService:
 
     @staticmethod
     def _write_spark(df, fmt: str) -> bytes:
-        import os
-        import tempfile
+        with _Scratch("svc_out_") as tmp:
+            if fmt == "arrows":
+                from zed_spark.sources.arrow_io import write_arrows
 
-        d = tempfile.mkdtemp(prefix="svc_out_")
-        if fmt == "arrows":
-            from zed_spark.sources.arrow_io import write_arrows
+                p = tmp.file("out.arrows")
+                write_arrows(df, p, single_file=True)
+            else:
+                pq = tmp.file("pq")
+                df.coalesce(1).write.mode("overwrite").parquet(pq)
+                import glob as _g
 
-            p = os.path.join(d, "out.arrows")
-            write_arrows(df, p, single_file=True)
-        else:
-            df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "pq"))
-            import glob as _g
-
-            p = _g.glob(os.path.join(d, "pq", "part-*.parquet"))[0]
-        with open(p, "rb") as fh:
-            return fh.read()
+                p = _g.glob(os.path.join(pq, "part-*.parquet"))[0]
+            with open(p, "rb") as fh:
+                return fh.read()
 
     def _render_rows(self, rows: list | None, df, fmt: str, ctrl=False) -> bytes:
         """`_capped_rows` output → payload in the negotiated format."""
@@ -478,13 +500,14 @@ class QueryService:
         )
         return ("\n".join(out) + "\n").encode()
 
-    def _load_body(self, body: bytes, ctype: str, params: dict) -> "object":
+    def _load_body(
+        self, body: bytes, ctype: str, params: dict, tmp: "_Scratch"
+    ) -> "object":
         """Request body → DataFrame per Content-Type (gzip sniffed
         like the reference's auto-uncompress — curl-add-gzip posts
-        gzip bytes with no header)."""
+        gzip bytes with no header).  A body a reader needs as a file
+        is written under `tmp`, which must outlive the frame's use."""
         import gzip
-        import os
-        import tempfile
 
         if body[:2] == b"\x1f\x8b":
             body = gzip.decompress(body)
@@ -502,14 +525,12 @@ class QueryService:
             from zed_spark.sources.vng import is_vng, read_vng
 
             if fmt == "vng" or is_vng(body):
-                p = os.path.join(tempfile.mkdtemp(prefix="svc_vng_"),
-                                 "body.vng")
+                p = tmp.file("body.vng")
                 with open(p, "wb") as fh:
                     fh.write(body)
                 return read_vng(self.spark, p)
         from zed_spark.sources.readers import read_any
 
-        d = tempfile.mkdtemp(prefix="svc_load_")
         if fmt is None:
             # auto-detect: zson / zng / json (the reference's anyio
             # detector order, restricted to self-describing formats —
@@ -533,24 +554,26 @@ class QueryService:
                 # prose never detects: bare words are NOT a zson
                 # stream of strings (anyio detector; curl-load-error)
                 raise ApiError(_detector_report(body))
-        if fmt in (None, "zson") and len(body) <= (32 << 20):
+        if fmt in (None, "zson"):
             # full-fidelity driver-side ZSON ingest: per-row presence
             # (__zed_missing), precise type identity (__zed_types),
             # and ns-exact time shadows (__zed_ns_*) ride the frame so
             # mixed-shape loads round-trip per-record types through
-            # the lake (zed missing semantics; nano.Ts).  Bodies past
-            # the size gate take the distributed reader below.
-            try:
-                from zed_spark.sources.ingest import zson_text_to_df
+            # the lake (zed missing semantics; nano.Ts).  A body that
+            # is not ZSON text, or is past the size gate, takes the
+            # distributed readers below; any other failure is a bug
+            # and fails the load.
+            from zed_spark.sources.ingest import NotIngested, zson_text_to_df
+            from zed_spark.sources.zson import ZsonError
 
+            try:
                 return zson_text_to_df(self.spark, body.decode("utf-8"))[0]
-            except Exception:
+            except (UnicodeDecodeError, ZsonError, NotIngested):
                 pass
         if fmt is None:
             for trial in ("zson", "zng", "json"):
-                p = os.path.join(d, "body" + ext[trial])
-                mode = "wb"
-                with open(p, mode) as fh:
+                p = tmp.file("body" + ext[trial])
+                with open(p, "wb") as fh:
                     fh.write(body)
                 try:
                     df = read_any(self.spark, p, trial)
@@ -559,7 +582,7 @@ class QueryService:
                 except Exception:
                     continue
             raise ApiError(_detector_report(body))
-        p = os.path.join(d, "body" + ext[fmt])
+        p = tmp.file("body" + ext[fmt])
         with open(p, "wb") as fh:
             fh.write(body)
         opts = {}
@@ -664,21 +687,24 @@ class QueryService:
         ):
             fmt = _pick_accept(accept, self.default_fmt)
             pool = self._pool_by_ref(parts[1])
-            df = self._load_body(body, headers.get("content-type", ""), params)
-            # presence (__zed_missing), per-row type identity
-            # (__zed_types), and ns shadows are part of the data —
-            # pools are heterogeneous in the reference; other
-            # sidecars stay request-local
-            df = df.drop(
-                *[
-                    c
-                    for c in df.columns
-                    if c.startswith("__zed_")
-                    and c not in ("__zed_missing", "__zed_types")
-                    and not c.startswith("__zed_ns_")
-                ]
-            )
-            cid = pool.load(df, branch=unquote(parts[3]))
+            with _Scratch("svc_load_") as tmp:
+                df = self._load_body(
+                    body, headers.get("content-type", ""), params, tmp
+                )
+                # presence (__zed_missing), per-row type identity
+                # (__zed_types), and ns shadows are part of the data
+                # — pools are heterogeneous in the reference; other
+                # sidecars stay request-local
+                df = df.drop(
+                    *[
+                        c
+                        for c in df.columns
+                        if c.startswith("__zed_")
+                        and c not in ("__zed_missing", "__zed_types")
+                        and not c.startswith("__zed_ns_")
+                    ]
+                )
+                cid = pool.load(df, branch=unquote(parts[3]))
             return 200, "application/json", self._commit_response(cid, fmt, [])
         if (
             len(parts) == 5

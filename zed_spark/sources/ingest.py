@@ -14,11 +14,29 @@ columns the rest of the engine consults:
   precision (nano.Ts, reference value.go:84) so lake objects keep the
   reference's exact bytes.
 
+The text is parsed once (values, type descriptors and ns times in one
+pass, zson.parse_zson_full) and handed to Spark as an Arrow table, so
+the frame is a local relation: the lake write and its key stats read
+columns instead of re-running Python rows.
+
 Shared by the service load path and the ztest harness."""
 
 from __future__ import annotations
 
-import re as _re
+import re
+
+# ZSON text parses on the driver (the reference parses it
+# single-goroutine too, zson/parser.go) — fine for request-bounded
+# HTTP loads, wrong for bulk data.  Past this gate (mirroring the VNG
+# gates) the parquet/CSV/JSON readers stay fully distributed.
+_ZSON_INGEST_MAX_BYTES = 32 << 20
+# a time literal with sub-µs digits: only such inputs carry ns shadows
+_SUB_US = re.compile(r"\d{2}:\d{2}:\d{2}\.\d{7,}")
+
+
+class NotIngested(ValueError):
+    """A body the driver-side ingest leaves to the distributed
+    readers: past the size gate, or holding no values."""
 
 
 def missing_paths(v, t, prefix="") -> list[str]:
@@ -70,9 +88,10 @@ def to_df(spark, values, tdescs=None, ns_shadows=None):
     records = all(isinstance(v, dict) and not isinstance(v, ZMap) for v in values)
     if not records:
         values = [{"this": v} for v in values]
+    row_types = [_infer_type(v) for v in values]
     t = T.NullType()
-    for v in values:
-        t = _merge_type(t, _infer_type(v))
+    for rt in row_types:
+        t = _merge_type(t, rt)
     t = _finalize(t)
     rows = [_conform(v, t) for v in values]
     miss = None
@@ -109,7 +128,7 @@ def to_df(spark, values, tdescs=None, ns_shadows=None):
             + [T.StructField("__zed_missing", T.ArrayType(T.StringType()))]
         )
         rows = [r + (m,) for r, m in zip(rows, miss)]
-    tmaps = type_maps(values, tdescs, records)
+    tmaps = type_maps(values, tdescs, records, row_types)
     if records and isinstance(t, T.StructType):
         # per-row FIELD ORDER: distinct orders are distinct zed record
         # types; the fused schema's merge order erases them.  Recorded
@@ -148,29 +167,85 @@ def to_df(spark, values, tdescs=None, ns_shadows=None):
                 + [T.StructField(f"__zed_ns_{col}", T.LongType())]
             )
             rows = [r + (nv,) for r, nv in zip(rows, ns_vals)]
-    return spark.createDataFrame(rows, t), (not records)
+    return _arrow_frame(spark, rows, t), (not records)
 
 
-def ns_shadows_of(blob, vals) -> dict | None:
-    """For a lake-load input with sub-µs time precision, re-parse at
-    ns and return {top-level time field → [int64 ns per row]} so the
-    object keeps the exact ns values the reference stores (nano.Ts)."""
+def _arrow_frame(spark, rows: list, t):
+    """Rows conformed to the Spark schema `t` → a DataFrame over an
+    Arrow table (a local relation: one columnar transfer, no Python
+    RDD for later actions to re-run)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(t)
+    cols = list(zip(*rows)) or [()] * len(schema)
+    for i, f in enumerate(t.fields):
+        if "map<" in f.dataType.simpleString():
+            cols[i] = [_pickled_order(v, f.dataType) for v in cols[i]]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+    return spark.createDataFrame(table, t)
+
+
+def _pickled_order(v, t):
+    """`v`, conformed to `t`, with each string-keyed map's entries in
+    the order Spark stores a map it gets as a Python row, so a load
+    through the Arrow frame writes the bytes that path wrote (the
+    arrows/parquet renderings of a pool show its stored map order)."""
+    from pyspark.sql import types as T
+
+    if v is None:
+        return v
+    if isinstance(t, T.MapType):
+        if isinstance(t.keyType, T.StringType):
+            v = _java_map_order(v)
+        return {k: _pickled_order(x, t.valueType) for k, x in v.items()}
+    if isinstance(t, T.ArrayType):
+        return [_pickled_order(x, t.elementType) for x in v]
+    if isinstance(t, T.StructType) and isinstance(v, tuple):
+        return tuple(_pickled_order(x, f.dataType) for x, f in zip(v, t.fields))
+    return v
+
+
+def _java_map_order(d: dict) -> dict:
+    """A pickled dict of 2..1000 entries (one SETITEMS batch) is read
+    into a default java.util.HashMap in reverse, which is copied into
+    a HashMap sized for it (net.razorvine.pickle.Unpickler); Spark
+    keeps that map's iteration order (ArrayBasedMapData).  A HashMap
+    iterates by bucket, and within a bucket in insertion order."""
+    n = len(d)
+    if not 2 <= n <= 1000:
+        return d
+    keys = list(d)[::-1]
+    cap = 16
+    while n > cap * 3 // 4:
+        cap *= 2
+    keys.sort(key=lambda k: _java_hash(k) & (cap - 1))
+    cap = 1 << (int(n / 0.75 + 1.0) - 1).bit_length()
+    keys.sort(key=lambda k: _java_hash(k) & (cap - 1))
+    return {k: d[k] for k in keys}
+
+
+def _java_hash(s: str) -> int:
+    """java.util.HashMap's spread of java.lang.String.hashCode."""
+    b = s.encode("utf-16-be")
+    h = 0
+    for i in range(0, len(b), 2):
+        h = (31 * h + (b[i] << 8 | b[i + 1])) & 0xFFFFFFFF
+    return h ^ (h >> 16)
+
+
+def ns_shadows(vals, ns_rows) -> dict | None:
+    """{top-level time field → [int64 ns per row]} for a record
+    stream parsed with track_ns, so a lake object keeps the exact ns
+    values the reference stores (nano.Ts).  A field gets a shadow when
+    it holds a time in some row and every row's value is a time
+    literal or null."""
     from datetime import datetime as _dt
 
-    if not (
-        isinstance(blob, str)
-        and _re.search(r"\d{2}:\d{2}:\d{2}\.\d{7,}", blob)
-    ):
-        return None
-    try:
-        from zed_spark.sources.zson import parse_zson_typed as _pzt9
-
-        vals_ns, _ = _pzt9(blob, time_ns=True)
-    except Exception:
-        return None
-    if len(vals_ns) != len(vals) or not all(
-        isinstance(v, dict) for v in vals
-    ):
+    if ns_rows is None or not all(isinstance(v, dict) for v in vals):
         return None
     cols: dict = {}
     names = {k for v in vals for k in v}
@@ -181,106 +256,89 @@ def ns_shadows_of(blob, vals) -> dict | None:
         )
         if not (has_time and clean):
             continue
-        nsv = [
-            v.get(c) if isinstance(v, dict) else None for v in vals_ns
-        ]
+        nsv = [r.get(c) for r in ns_rows]
         if all(x is None or isinstance(x, int) for x in nsv):
             cols[c] = nsv
     return cols or None
 
 
-def type_maps(values, tdescs, records: bool):
+def type_maps(values, tdescs, records: bool, row_types=None):
     """Per-row {dotted path → zed type string} maps, or None when the
-    descriptors add nothing beyond widened static inference."""
+    descriptors add nothing beyond widened static inference.
+    `row_types` are the rows' own inferred Spark types, if known."""
     if tdescs is None or len(tdescs) != len(values):
         return None
     from zed_spark.functions.introspect import zed_type_name
     from zed_spark.sources.zson import _finalize, _infer_type
     from zed_spark.sources.ztypes import path_descs, render
 
-    need = False
-    renders: set = set()
-    maps: list[dict] = []
-    for v, d in zip(values, tdescs):
-        precise = render(d)
-        renders.add(precise)
-        if not need:
-            try:
-                static = zed_type_name(_finalize(_infer_type(v)))
-            except Exception:
-                static = None
-            # informative when a row's precise type differs from its
-            # own widened static inference (named/sized/ip identity)
-            if precise != static:
+    precise = [render(d) for d in tdescs]
+    # rows that differ from each other carry per-row identity a single
+    # merged schema erases (const-type-is); otherwise the descriptors
+    # inform only where a row's precise type differs from its own
+    # widened static inference (named/sized/ip identity)
+    need = len(set(precise)) > 1
+    if not need:
+        if row_types is None:
+            row_types = [_infer_type(v) for v in values]
+        static: dict = {}
+        for p, rt in zip(precise, row_types):
+            key = rt.simpleString()
+            if key not in static:
+                try:
+                    static[key] = zed_type_name(_finalize(rt))
+                except Exception:
+                    static[key] = None
+            if p != static[key]:
                 need = True
+                break
+    if not need:
+        return None
+    maps: list[dict] = []
+    for d, p in zip(tdescs, precise):
         if records:
             m = {}
-            for p, dd in path_descs(d).items():
-                m[p] = render(dd)
+            for path, dd in path_descs(d).items():
+                m[path] = render(dd)
                 if dd[0] == "typeval":
                     # type VALUES carry their denoted type under an
                     # aux key so kind()/nameof() see through them
-                    m["\x00tv:" + p] = render(dd[1])
+                    m["\x00tv:" + path] = render(dd[1])
         else:
-            m = {"": precise}
+            m = {"": p}
             if d[0] == "typeval":
                 m["\x00tv:"] = render(d[1])
         maps.append(m)
-    if len(renders) > 1:
-        # rows differ from each other: per-row identity that a single
-        # merged schema erases (const-type-is)
-        need = True
-    return maps if need else None
-
-
-import re as _re
-
-# type-value strings compare under the engine's documented widening
-# (SURVEY §1.2): int8/16/32 and uint* ride as int64, float16/32 as
-# float64, named types and set-ness are structural. Both sides of the
-# compare pass through the same rewrite, so data strings that happen
-# to look like type syntax stay consistent.
-_TYPE_INT = _re.compile(r"\bu?int(?:8|16|32|64)\b")
-_TYPE_FLOAT = _re.compile(r"\bfloat(?:16|32)\b")
-_TYPE_NAMED = _re.compile(r"\b[A-Za-z_]\w*=")
-
-
-
-
-_ZSON_INGEST_MAX_BYTES = int(
-    __import__("os").environ.get(
-        "SPARK_GRAFT_ZSON_INGEST_MAX_BYTES", str(256 * 1024 * 1024)
-    )
-)
+    return maps
 
 
 def zson_text_to_df(spark, text: str):
-    """One-stop driver-side ZSON ingest: parse + sidecars.
+    """One-stop driver-side ZSON ingest: one parse, sidecars, and an
+    Arrow-backed local frame.
 
     Returns (DataFrame, wrapped) where wrapped is True when the input
     was a non-record value stream carried in a ``this`` column.
-
-    ZSON is a human-readable text format parsed row-by-row on the
-    driver (the reference parses it single-goroutine too,
-    zson/parser.go) — fine for request-bounded HTTP loads, wrong for
-    bulk data. The size gate mirrors the VNG gates: past it, the
-    parquet/CSV/JSON readers stay fully distributed."""
-    from zed_spark.sources.zson import parse_zson_typed
-    from zed_spark.sources.ztypes import parse_types
+    Raises ZsonError when the text is not ZSON, and NotIngested past
+    the size gate or when it holds no values; callers hand those
+    bodies to the distributed readers."""
+    from zed_spark.sources.zson import ZsonError, parse_zson_full
 
     if len(text) > _ZSON_INGEST_MAX_BYTES:
-        raise ValueError(
+        raise NotIngested(
             f"zson ingest: input exceeds {_ZSON_INGEST_MAX_BYTES} bytes "
             f"— ZSON text parses on the driver; load parquet/csv/json "
-            f"for data at scale (or raise "
-            f"SPARK_GRAFT_ZSON_INGEST_MAX_BYTES)"
+            f"for data at scale"
         )
-    vals, _named = parse_zson_typed(text)
-    if not vals:
-        raise ValueError("no records found")
-    nd: dict = {}
     try:
-        descs = parse_types(text, nd)
-    except Exception:
-        descs = None
-    return to_df(spark, vals, descs, ns_shadows=ns_shadows_of(text, vals))
+        p = parse_zson_full(text, track_ns=bool(_SUB_US.search(text)))
+    except ZsonError:
+        raise
+    except ValueError as e:
+        # a malformed literal (string escape, date, sized int) is a
+        # ZSON syntax error too
+        raise ZsonError(str(e)) from e
+    if not p.values:
+        raise NotIngested("no records found")
+    return to_df(
+        spark, p.values, p.descs, ns_shadows=ns_shadows(p.values, p.ns_rows)
+    )

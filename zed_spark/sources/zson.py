@@ -36,9 +36,18 @@ import json
 import math
 import re
 from datetime import date, datetime, timedelta, timezone
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from zed_spark.sources.ztypes import (
+    canonical_type_string,
+    classify_token,
+    decorate,
+    merge_elem_descs,
+    parse_type_string,
+)
 
 # --- parser ----------------------------------------------------------------
 
@@ -54,6 +63,24 @@ _HEX_BODY = re.compile(r"(?:[0-9a-fA-F]{2})*")
 _BARE_END = set(",}]|)( \t\r\n")
 _BARE_END_KEY = _BARE_END | {":"}
 _FLOATISH = re.compile(r"[-+]?(\d+\.\d*|\.\d+|\d+)([eE][-+]?\d+)?")
+
+# descriptors of the bare-token primitives (ztypes.py forms)
+_PRIM_DESCS = {
+    n: ("prim", n)
+    for n in (
+        "null", "bool", "float64", "bytes", "int64", "time",
+        "duration", "ip", "net", "string",
+    )
+}
+_NULL_DESC = _PRIM_DESCS["null"]
+_BOOL_DESC = _PRIM_DESCS["bool"]
+_FLOAT_DESC = _PRIM_DESCS["float64"]
+_BYTES_DESC = _PRIM_DESCS["bytes"]
+_TIME_DESC = _PRIM_DESCS["time"]
+_STRING_DESC = _PRIM_DESCS["string"]
+# a top-level field whose value is not a time literal or null: its
+# column carries no ns shadow
+_NO_NS = object()
 
 _DUR_NS = {
     "ns": 1,
@@ -86,14 +113,14 @@ def order_text_keys(raws: list) -> list:
     Returns the raw texts in stored order — reusable at render time
     because Spark's MapType does not preserve entry order."""
     from zed_spark.sources.zng import _append_tagged, encode_body_desc
-    from zed_spark.sources.ztypes import canon_desc, parse_types
+    from zed_spark.sources.ztypes import canon_desc
 
     keyed = []
     descs = []
     for raw in raws:
         try:
-            d = canon_desc(parse_types(raw)[0])
-            k = parse_zson(raw)[0]
+            vals, _, kdescs, _ = parse_zson_full(raw)
+            k, d = vals[0], canon_desc(kdescs[0])
         except Exception:
             d, k = ("prim", "string"), raw
         descs.append(d)
@@ -264,7 +291,18 @@ class ZsonError(ValueError):
 
 
 class _Parser:
-    def __init__(self, s: str, time_ns: bool = False):
+    """One pass over ZSON text: each value comes back beside its zed
+    type descriptor (ztypes.py forms), the per-value type identity the
+    widened Spark value model erases (sized ints, ip/net, named types;
+    values are (type, bytes) in the reference data model)."""
+
+    def __init__(
+        self,
+        s: str,
+        time_ns: bool = False,
+        named_descs: dict | None = None,
+        track_ns: bool = False,
+    ):
         self.s = s
         self.i = 0
         self.n = len(s)
@@ -277,6 +315,18 @@ class _Parser:
         # inferred DataType ((=name) defines from the value's shape;
         # (name=prim) from the stated primitive — zson.md named types)
         self.named: dict = {}
+        # the same definitions as descriptors (name -> descriptor); a
+        # caller may share one across documents of a stream
+        self.named_descs: dict = {} if named_descs is None else named_descs
+        # False once a decorator's type did not parse as a descriptor:
+        # the values stand, the descriptors are withheld
+        self.descs_ok = True
+        # exact ns of the top-level record's time fields, beside the
+        # µs datetimes (nano.Ts): parse_value hands the dict to the
+        # top-level record only
+        self.track_ns = track_ns
+        self.ns_row: dict | None = None
+        self.last_time: tuple | None = None
 
     def _ws(self) -> None:
         s, n = self.s, self.n
@@ -299,42 +349,43 @@ class _Parser:
         self._ws()
         return self.i >= self.n
 
-    def parse_value(self, key_mode: bool = False):
+    def parse_value(self, key_mode: bool = False) -> tuple:
+        """The next value and its type descriptor."""
+        ns_row, self.ns_row = self.ns_row, None
         self._ws()
         if self.i >= self.n:
             raise ZsonError("unexpected end of input")
         c = self.s[self.i]
         if c == "{":
-            v = self._record()
+            v, d = self._record(ns_row)
         elif c == "[":
-            v = self._array()
+            v, d = self._array()
         elif c == "|":
-            v = self._set_or_map()
-        elif c == '"':
-            v = self._string('"')
-        elif c == "`":
-            v = self._string("`")
+            v, d = self._set_or_map()
+        elif c == '"' or c == "`":
+            v, d = self._string(c), _STRING_DESC
         elif c == "<":
-            v = self._type_value()
+            v, d = self._type_value()
         elif self.s.startswith("error(", self.i):
             self.i += len("error(")
-            inner = self.parse_value()
+            inner, idesc = self.parse_value()
             self._ws()
             if self.i >= self.n or self.s[self.i] != ")":
                 raise ZsonError(f"unterminated error(...) at {self.i}")
             self.i += 1
-            v = ZError(inner)
+            v, d = ZError(inner), ("error", idesc)
         else:
-            v = self._bare(key_mode)
-        return self._decorators(v)
+            v, d = self._bare(key_mode)
+        return self._decorators(v, d)
 
-    def _record(self) -> dict:
+    def _record(self, ns_row: dict | None = None) -> tuple:
         self.i += 1  # {
         out: dict = {}
+        fields: list = []
         self._ws()
         if self.i < self.n and self.s[self.i] == "}":
             self.i += 1
-            return out
+            return out, ("record", ())
         while True:
             self._ws()
             name = self._name()
@@ -342,18 +393,30 @@ class _Parser:
             if self.i >= self.n or self.s[self.i] != ":":
                 raise ZsonError(f"expected ':' after field name at {self.i}")
             self.i += 1
-            v = self.parse_value()
+            v, d = self.parse_value()
             if name not in out:
                 # zed records are ordered field lists that CAN carry
                 # duplicate names (compiler/ztests/from-pass fixture);
                 # the dict model keeps the first occurrence
                 out[name] = v
+                fields.append((name, d))
+                if ns_row is not None:
+                    ns_row[name] = self._ns_of(v)
             self._ws()
             if self.i < self.n and self.s[self.i] == "}":
                 self.i += 1
-                return out
+                return out, ("record", tuple(fields))
             if self.i >= self.n:
                 raise ZsonError("unterminated record")
+
+    def _ns_of(self, v):
+        """Exact ns of a top-level field value: an int for a time
+        literal, None for null, _NO_NS for anything else."""
+        if v is None:
+            return None
+        if self.last_time is not None and self.last_time[0] is v:
+            return self.last_time[1]
+        return _NO_NS
 
     def _name(self) -> str:
         if self.s[self.i] == '"':
@@ -364,9 +427,10 @@ class _Parser:
         self.i = m.end()
         return m.group(0)
 
-    def _array(self, is_set: bool = False) -> list:
+    def _array(self, is_set: bool = False) -> tuple:
         self.i += 1  # [ (caller consumed any leading |)
         out = []
+        descs = []
         quoted = []
         while True:
             self._ws()
@@ -378,13 +442,18 @@ class _Parser:
                     if self.s[self.i : self.i + 1] != "|":
                         raise ZsonError("unterminated set (expected ']|')")
                     self.i += 1
-                    return _normalize_set(out, quoted)
-                return out
+                    return (
+                        _normalize_set(out, quoted),
+                        ("set", merge_elem_descs(descs)),
+                    )
+                return out, ("array", merge_elem_descs(descs))
             self._quoted = False
-            out.append(self.parse_value())
+            v, d = self.parse_value()
+            out.append(v)
+            descs.append(d)
             quoted.append(getattr(self, "_quoted", False))
 
-    def _set_or_map(self):
+    def _set_or_map(self) -> tuple:
         if self.s.startswith("|[", self.i):
             self.i += 1
             return self._array(is_set=True)
@@ -392,6 +461,8 @@ class _Parser:
             self.i += 2
             out = ZMap()
             entries: list = []  # (raw key text, key, value)
+            kdescs: list = []
+            vdescs: list = []
             text_keys = False
             while True:
                 self._ws()
@@ -401,13 +472,15 @@ class _Parser:
                 if self.i >= self.n:
                     raise ZsonError("unterminated map")
                 k0 = self.i
-                k = self.parse_value(key_mode=True)
+                k, kd = self.parse_value(key_mode=True)
                 raw = self.s[k0:self.i].strip()
                 self._ws()
                 if self.i >= self.n or self.s[self.i] != ":":
                     raise ZsonError(f"expected ':' in map at {self.i}")
                 self.i += 1
-                v = self.parse_value()
+                v, vd = self.parse_value()
+                kdescs.append(kd)
+                vdescs.append(vd)
                 try:
                     hash(k)
                     collide = k in out or (
@@ -426,9 +499,10 @@ class _Parser:
                     text_keys = True
                 entries.append((raw, k, v))
                 out[NULL_KEY if k is None else (k if not collide else TEXT_KEY + raw)] = v
+            d = ("map", merge_elem_descs(kdescs), merge_elem_descs(vdescs))
             if not text_keys:
-                return out
-            return _text_key_map(entries)
+                return out, d
+            return _text_key_map(entries), d
         raise ZsonError(f"unexpected '|' at {self.i}")
 
     def _string(self, quote: str) -> str:
@@ -459,7 +533,7 @@ class _Parser:
         self.i = j + 1
         return json.loads(raw)
 
-    def _type_value(self) -> str:
+    def _type_value(self) -> tuple:
         # <type> values kept as their canonical string; union member
         # order canonicalizes per CompareTypes (the reference's type
         # context normalizes unions — sort-types golden renders
@@ -469,16 +543,28 @@ class _Parser:
             raise ZsonError("unterminated type value")
         v = self.s[self.i + 1 : j]
         self.i = j + 1
+        # the descriptor keeps the denoted type so kind()/nameof() see
+        # through the type value (kind.yaml: kind(<{s:string}>) is
+        # "record"), and registers any name=def inside it — the type
+        # context is shared (nameof.yaml <foo={x:int64}>)
+        d = ("typeval", self._desc(parse_type_string, v, self.named_descs))
         if "(" in v and "," in v:
             try:
-                from zed_spark.sources.ztypes import canonical_type_string
-
                 v = canonical_type_string(v)
             except Exception:
                 pass
-        return v
+        return v, d
 
-    def _bare(self, key_mode: bool = False):
+    def _desc(self, fn, *args):
+        """A descriptor-only step: a failure withholds the descriptors
+        of this parse, never its values."""
+        try:
+            return fn(*args)
+        except Exception:
+            self.descs_ok = False
+            return _NULL_DESC
+
+    def _bare(self, key_mode: bool = False) -> tuple:
         self._quoted = False
         end = _BARE_END_KEY if key_mode else _BARE_END
         j = self.i
@@ -505,9 +591,7 @@ class _Parser:
                     k3 += 1
                 if wide and k3 < self.n and s[k3] == ":":
                     self.i = j2
-                    if self.time_ns and _TIME.match(wide):
-                        return _parse_time_ns(wide)
-                    return _classify(wide)
+                    return self._token(wide)
             if ":" in wide:
                 best = None
                 for k2 in range(len(wide), 0, -1):
@@ -541,23 +625,40 @@ class _Parser:
                         best = k2
                         break
                 if best is not None:
-                    tok = wide[:best]
                     self.i += best
-                    if self.time_ns and _TIME.match(tok):
-                        return _parse_time_ns(tok)
-                    return _classify(tok)
+                    return self._token(wide[:best])
         if not tok:
             raise ZsonError(f"empty value at {self.i}")
         self.i = j
-        if self.time_ns and _TIME.match(tok):
-            return _parse_time_ns(tok)
-        return _classify(tok)
+        return self._token(tok)
 
-    def _decorators(self, v):
+    def _token(self, tok: str) -> tuple:
+        """A bare primitive token → (value, descriptor)."""
+        if self.time_ns and _TIME.match(tok):
+            return _parse_time_ns(tok), _TIME_DESC
+        v = _classify(tok)
+        if v is None:
+            return v, _NULL_DESC
+        if isinstance(v, bool):
+            return v, _BOOL_DESC
+        if isinstance(v, datetime):
+            if self.track_ns:
+                self.last_time = (v, _parse_time_ns(tok))
+            return v, _TIME_DESC
+        if isinstance(v, float):
+            return v, _FLOAT_DESC
+        if isinstance(v, bytes):
+            return v, _BYTES_DESC
+        if tok.startswith("%"):
+            return v, ("enum", (tok[1:],))
+        # ints (int64 or duration) and strings (ip, net or string)
+        return v, _PRIM_DESCS[classify_token(tok)]
+
+    def _decorators(self, v, d) -> tuple:
         while True:
             self._ws()
             if self.i >= self.n or self.s[self.i] != "(":
-                return v
+                return v, d
             j = self._match_paren(self.i)
             typ = self.s[self.i + 1 : j].strip()
             if re.fullmatch(r"\d+", typ) and typ not in self.named:
@@ -568,6 +669,7 @@ class _Parser:
                 raise ZsonError(f"bad type decorator ({typ})")
             self.i = j + 1
             v = self._apply_decorator(v, typ)
+            d = self._desc(decorate, d, typ, self.named_descs)
 
     def _apply_decorator(self, v, typ: str):
         if typ.startswith("="):
@@ -675,6 +777,8 @@ def _parse_time(tok: str) -> datetime:
     # RFC 3339, ns precision in the format; Spark timestamps are µs —
     # truncate (the same compromise as the parquet reader)
     m = re.match(r"(.*?)(\.\d+)?(Z|[+-]\d{2}:\d{2})$", tok)
+    if m is None:
+        raise ZsonError(f"bad time value {tok!r}")
     base, frac, tz = m.group(1), m.group(2) or "", m.group(3)
     # digit-string math, not float: int(float('.778549')*1e6) can be
     # off by one ulp; ns digits beyond µs truncate
@@ -763,23 +867,56 @@ def parse_zson(text: str) -> list:
     return parse_zson_typed(text)[0]
 
 
-def parse_zson_typed(text: str, time_ns: bool = False) -> tuple[list, dict]:
-    """Parse ZSON text → (values, named_types) where named_types maps
-    each decorator-defined type name to its Spark DDL string (types
-    widen per SURVEY §1.2). Lets a query reference input-defined
-    named types (<person>, cast(x, <port>), ...). time_ns=True
-    parses time values as exact int64 ns (writer-golden ns carry)."""
-    p = _Parser(text, time_ns=time_ns)
+class ZsonParse(NamedTuple):
+    """What one pass over a ZSON text yields."""
+
+    values: list
+    # decorator-defined type name → Spark DDL (types widen per SURVEY
+    # §1.2), so a query can reference input-defined named types
+    # (<person>, cast(x, <port>), ...)
+    named: dict
+    # one zed type descriptor per value (ztypes.py forms), or None
+    # when a decorator's type did not parse
+    descs: list | None
+    # with track_ns: per value, {top-level field → exact int64 ns of
+    # its time literal, None for null, _NO_NS otherwise}
+    ns_rows: list | None
+
+
+def parse_zson_full(
+    text: str,
+    time_ns: bool = False,
+    named_descs: dict | None = None,
+    track_ns: bool = False,
+) -> ZsonParse:
+    """Parse ZSON text once into values, named types, type descriptors
+    and (track_ns) the exact ns of top-level time fields.  time_ns=True
+    parses time values as exact int64 ns (writer-golden ns carry).
+    `named_descs` (name → descriptor) persists definitions across
+    calls — pass the same dict for a multi-document stream."""
+    p = _Parser(text, time_ns=time_ns, named_descs=named_descs, track_ns=track_ns)
     out = []
+    descs = []
+    ns_rows = [] if track_ns else None
     while not p.at_end():
-        out.append(p.parse_value())
+        if track_ns:
+            p.ns_row = {}
+            ns_rows.append(p.ns_row)
+        v, d = p.parse_value()
+        out.append(v)
+        descs.append(d)
     ddl = {}
     for name, t in p.named.items():
         try:
             ddl[name] = _finalize(t).simpleString()
         except Exception:
             pass
-    return out, ddl
+    return ZsonParse(out, ddl, descs if p.descs_ok else None, ns_rows)
+
+
+def parse_zson_typed(text: str, time_ns: bool = False) -> tuple[list, dict]:
+    """Parse ZSON text → (values, named_types); see parse_zson_full."""
+    return parse_zson_full(text, time_ns=time_ns)[:2]
 
 
 def _prim_of(t) -> str:
@@ -1234,57 +1371,6 @@ def read_zson_fused(spark: SparkSession, path: str) -> DataFrame:
     from zed_spark.sources.shapes import fuse_shape_groups
 
     return fuse_shape_groups(read_zson(spark, path))
-
-
-def zson_to_df_ns(spark: SparkSession, text: str) -> DataFrame | None:
-    """Driver-side ZSON → DataFrame carrying `__zed_ns_<field>` int64
-    shadows for top-level time fields with sub-µs precision, so lake
-    loads keep the exact ns the reference stores (nano.Ts,
-    value.go:84). Returns None when the input isn't a uniform record
-    stream (callers fall back to the normal reader)."""
-    import re as _re9
-
-    if not _re9.search(r"\d{2}:\d{2}:\d{2}\.\d{7,}", text):
-        return None
-    try:
-        vals, _ = parse_zson_typed(text)
-        vals_ns, _ = parse_zson_typed(text, time_ns=True)
-    except Exception:
-        return None
-    if not vals or len(vals) != len(vals_ns):
-        return None
-    if not all(isinstance(v, dict) and not isinstance(v, ZMap) for v in vals):
-        return None
-    t = T.NullType()
-    for v in vals:
-        t = _merge_type(t, _infer_type(v))
-    t = _finalize(t)
-    if not isinstance(t, T.StructType):
-        return None
-    from datetime import datetime as _dt
-
-    shadows: dict[str, list] = {}
-    for f in t.fields:
-        if not isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
-            continue
-        nsv = [v.get(f.name) for v in vals_ns]
-        if all(x is None or isinstance(x, int) for x in nsv):
-            shadows[f.name] = nsv
-    if not shadows:
-        return None
-    rows = [_conform(v, t) for v in vals]
-    out_t = T.StructType(
-        list(t.fields)
-        + [
-            T.StructField(f"__zed_ns_{c}", T.LongType())
-            for c in shadows
-        ]
-    )
-    rows = [
-        r + tuple(shadows[c][i] for c in shadows)
-        for i, r in enumerate(rows)
-    ]
-    return spark.createDataFrame(rows, out_t)
 
 
 # --- writer ----------------------------------------------------------------

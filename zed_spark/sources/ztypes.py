@@ -1,27 +1,26 @@
-"""Per-value zed TYPE DESCRIPTORS for ZSON text.
+"""Zed TYPE DESCRIPTORS: the per-value type identity of ZSON values.
 
-The value parser (zson.py) deliberately widens types (SURVEY §1.2):
-sized ints ride as int64, ip/net as strings, named types dissolve.
-That widening erases the per-row type identity the reference carries
-on every value (zed/super data model: values are (type, bytes)) —
-which `typeof`/`is`/`nameof`/`kind` and several writers observe.
+The value model widens types (SURVEY §1.2): sized ints ride as int64,
+ip/net as strings, named types dissolve. That widening erases the
+per-row type identity the reference carries on every value (zed/super
+data model: values are (type, bytes)) — which `typeof`/`is`/`nameof`/
+`kind` and several writers observe.
 
-This module is a SECOND, value-free pass over the same ZSON text: it
-parses only enough to build a small type-descriptor tree per
-top-level value, tracking decorators `(int32)`, `(=name)`, `(name)`,
-`(name=type)` and the lexical form of primitives (ip, net, time,
-duration, ...). Descriptors render to canonical zed type syntax with
-the first-occurrence convention for named types (`name=def` at the
-first DFS occurrence, bare `name` afterwards — zson.md §2.3), which
-is exactly what `typeof(this)` prints in the reference
+The ZSON parser (zson.py) returns a small descriptor tree beside each
+value it parses, built with this module's grammar: the lexical type of
+a bare token (`classify_token`), decorators `(int32)`, `(=name)`,
+`(name)`, `(name=type)` (`decorate`) and type syntax
+(`parse_type_string`). Descriptors render to canonical zed type syntax
+with the first-occurrence convention for named types (`name=def` at
+the first DFS occurrence, bare `name` afterwards — zson.md §2.3),
+which is exactly what `typeof(this)` prints in the reference
 (runtime/ztests/expr/function/typeof.yaml).
 
-Keeping this a separate pass means the (heavily exercised) value
-parser is untouched, and per-row type tracking stays an opt-in
-sidecar: the ztest harness attaches a `__zed_types` map column only
-when some row's precise type differs from what static inference
-would say (zed_spark/lang/compiler.py consults it in
-typeof/is/nameof/kind/typeunder).
+Per-row type tracking stays an opt-in sidecar: ingest attaches a
+`__zed_types` map column only when some row's precise type differs
+from what static inference would say (zed_spark/lang/compiler.py
+consults it in typeof/is/nameof/kind/typeunder). This module also
+holds the reference's type order (`compare_descs`, `type_sort_key`).
 
 Reference parity: zson/parser.go (type decorators), zed.TypeRecord/
 TypeNamed rendering in zson/formatter.go:Typedef.
@@ -53,8 +52,6 @@ _DUR = re.compile(r"[+-]?(\d+(\.\d+)?(ns|us|ms|s|m|h|d|w|y))+$")
 _IP4 = re.compile(r"(\d{1,3}\.){3}\d{1,3}$")
 _IP6 = re.compile(r"[0-9a-fA-F:]*:[0-9a-fA-F:.]*$")
 _NET = re.compile(r".+/\d{1,3}$")
-_BARE_END = set(",}]|)( \t\r\n")
-_BARE_END_KEY = _BARE_END | {":"}
 
 _PRIMS = {
     "uint8", "uint16", "uint32", "uint64", "uint128", "uint256",
@@ -369,257 +366,44 @@ def merge_elem_descs(descs: list):
     )
 
 
-class _TypeParser:
-    """Mirror of zson._Parser that yields type descriptors instead of
-    values (same token boundaries, same decorator grammar)."""
-
-    def __init__(self, s: str, named: dict | None = None):
-        self.s = s
-        self.i = 0
-        self.n = len(s)
-        self.named: dict = {} if named is None else named
-
-    # --- lexing (identical skip rules to zson._Parser) ---------------
-    def _ws(self) -> None:
-        s, n = self.s, self.n
-        while self.i < n:
-            c = s[self.i]
-            if c in " \t\r\n,":
-                self.i += 1
-            elif s.startswith("//", self.i):
-                j = s.find("\n", self.i)
-                self.i = n if j < 0 else j + 1
-            elif s.startswith("/*", self.i):
-                j = s.find("*/", self.i + 2)
-                if j < 0:
-                    raise ValueError("unterminated /* comment")
-                self.i = j + 2
-            else:
-                return
-
-    def at_end(self) -> bool:
-        self._ws()
-        return self.i >= self.n
-
-    def parse_value(self, key_mode: bool = False):
-        self._ws()
-        if self.i >= self.n:
-            raise ValueError("unexpected end of input")
-        c = self.s[self.i]
-        if c == "{":
-            d = self._record()
-        elif c == "[":
-            d = self._array()
-        elif c == "|":
-            d = self._set_or_map()
-        elif c in ('"', "`"):
-            self._skip_string(c)
-            d = ("prim", "string")
-        elif c == "<":
-            j = self.s.find(">", self.i)
-            if j < 0:
-                raise ValueError("unterminated type value")
-            # register any name=def inside the type VALUE too (type
-            # context is shared — nameof.yaml <foo={x:int64}>); keep
-            # the denoted type so kind()/nameof() can see through the
-            # type value (kind.yaml: kind(<{s:string}>) is "record")
-            inner = parse_type_string(self.s[self.i + 1 : j], self.named)
-            self.i = j + 1
-            d = ("typeval", inner)
-        elif self.s.startswith("error(", self.i):
-            self.i += len("error(")
-            inner = self.parse_value()
-            self._ws()
-            if self.i >= self.n or self.s[self.i] != ")":
-                raise ValueError("unterminated error(...)")
-            self.i += 1
-            d = ("error", inner)
-        else:
-            d = self._bare(key_mode)
-        return self._decorators(d)
-
-    def _record(self):
-        self.i += 1
-        fields = []
-        self._ws()
-        if self.i < self.n and self.s[self.i] == "}":
-            self.i += 1
-            return ("record", ())
-        while True:
-            self._ws()
-            name = self._name()
-            self._ws()
-            if self.i >= self.n or self.s[self.i] != ":":
-                raise ValueError(f"expected ':' at {self.i}")
-            self.i += 1
-            d = self.parse_value()
-            if all(n != name for n, _ in fields):
-                fields.append((name, d))
-            self._ws()
-            if self.i < self.n and self.s[self.i] == "}":
-                self.i += 1
-                return ("record", tuple(fields))
-            if self.i >= self.n:
-                raise ValueError("unterminated record")
-
-    def _name(self) -> str:
-        if self.s[self.i] == '"':
-            j = self._skip_string('"')
-            import json
-
-            return json.loads(j)
-        m = _IDENT.match(self.s, self.i)
-        if not m:
-            raise ValueError(f"bad field name at {self.i}")
-        self.i = m.end()
-        return m.group(0)
-
-    def _array(self, is_set: bool = False):
-        self.i += 1
-        elems = []
-        while True:
-            self._ws()
-            if self.i >= self.n:
-                raise ValueError("unterminated array/set")
-            if self.s[self.i] == "]":
-                self.i += 1
-                if is_set:
-                    if self.s[self.i : self.i + 1] != "|":
-                        raise ValueError("unterminated set")
-                    self.i += 1
-                    return ("set", merge_elem_descs(elems))
-                return ("array", merge_elem_descs(elems))
-            elems.append(self.parse_value())
-
-    def _set_or_map(self):
-        if self.s.startswith("|[", self.i):
-            self.i += 1
-            return self._array(is_set=True)
-        if self.s.startswith("|{", self.i):
-            self.i += 2
-            keys, vals = [], []
-            while True:
-                self._ws()
-                if self.s.startswith("}|", self.i):
-                    self.i += 2
-                    return (
-                        "map",
-                        merge_elem_descs(keys),
-                        merge_elem_descs(vals),
-                    )
-                if self.i >= self.n:
-                    raise ValueError("unterminated map")
-                keys.append(self.parse_value(key_mode=True))
-                self._ws()
-                if self.i >= self.n or self.s[self.i] != ":":
-                    raise ValueError(f"expected ':' in map at {self.i}")
-                self.i += 1
-                vals.append(self.parse_value())
-        raise ValueError(f"unexpected '|' at {self.i}")
-
-    def _skip_string(self, quote: str) -> str:
-        if quote == "`":
-            j = self.s.find("`", self.i + 1)
-            if j < 0:
-                raise ValueError("unterminated backtick string")
-            raw = self.s[self.i : j + 1]
-            self.i = j + 1
-            return raw
-        j = self.i + 1
-        s = self.s
-        while j < self.n:
-            if s[j] == "\\":
-                j += 2
-                continue
-            if s[j] == '"':
-                break
-            j += 1
-        if j >= self.n:
-            raise ValueError("unterminated string")
-        raw = s[self.i : j + 1]
-        self.i = j + 1
-        return raw
-
-    def _bare(self, key_mode: bool = False):
-        end = _BARE_END_KEY if key_mode else _BARE_END
-        j = self.i
-        s = self.s
-        while j < self.n and s[j] not in end:
-            j += 1
-        tok = s[self.i : j]
-        if not tok:
-            raise ValueError(f"empty value at {self.i}")
-        self.i = j
-        if tok.startswith("%"):
-            return ("enum", (tok[1:],))
-        return ("prim", classify_token(tok))
-
-    def _decorators(self, d):
-        while True:
-            self._ws()
-            if self.i >= self.n or self.s[self.i] != "(":
-                return d
-            j = self._match_paren(self.i)
-            typ = self.s[self.i + 1 : j].strip()
-            self.i = j + 1
-            d = self._apply(d, typ)
-
-    def _apply(self, d, typ: str):
-        if typ.startswith("="):
-            name = typ[1:]
-            if not name:
-                return d
-            if d[0] == "typeval":
-                # (=name) on a type VALUE names the DENOTED type
-                # (nameof.yaml: <{x:int64}>(=bar) counts as bar)
-                self.named[name] = d[1]
-                return ("typeval", ("named", name, d[1]))
-            inner = d[2] if d[0] == "named" and d[1] == name else d
-            self.named[name] = inner
-            return ("named", name, inner)
-        m = _IDENT.match(typ)
-        if (
-            m
-            and m.end() < len(typ)
-            and typ[m.end()] == "="
-            and not typ.startswith(("{", "[", "(", "|"))
-        ):
-            # (name=type): define AND apply
-            name = m.group(0)
-            inner = parse_type_string(typ[m.end() + 1 :], self.named)
-            self.named[name] = inner
-            return ("named", name, inner)
-        if typ in self.named:
-            return ("named", typ, self.named[typ])
-        if typ in _PRIMS:
-            return ("prim", typ)
-        # full type ascription — ({a:int32}), ((int64,string)), [...]
-        try:
-            return parse_type_string(typ, self.named)
-        except Exception:
+def decorate(d, typ: str, named: dict):
+    """The descriptor of a value of descriptor `d` decorated `(typ)`:
+    `(=name)` names it, `(name=type)` defines and applies a type, a
+    defined name or primitive applies it, and any other type
+    ascription (`({a:int32})`, `((int64,string))`) parses whole.
+    `named` (name → descriptor) receives the definitions."""
+    if typ.startswith("="):
+        name = typ[1:]
+        if not name:
             return d
-
-    def _match_paren(self, start: int) -> int:
-        depth = 0
-        for j in range(start, self.n):
-            if self.s[j] == "(":
-                depth += 1
-            elif self.s[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    return j
-        raise ValueError("unterminated type decorator")
-
-
-def parse_types(text: str, named: dict | None = None) -> list:
-    """One type descriptor per top-level ZSON value in `text`.
-    `named` (name → descriptor) persists definitions across values —
-    pass the same dict for a multi-document stream."""
-    p = _TypeParser(text, named)
-    out = []
-    while not p.at_end():
-        out.append(p.parse_value())
-    return out
+        if d[0] == "typeval":
+            # (=name) on a type VALUE names the DENOTED type
+            # (nameof.yaml: <{x:int64}>(=bar) counts as bar)
+            named[name] = d[1]
+            return ("typeval", ("named", name, d[1]))
+        inner = d[2] if d[0] == "named" and d[1] == name else d
+        named[name] = inner
+        return ("named", name, inner)
+    m = _IDENT.match(typ)
+    if (
+        m
+        and m.end() < len(typ)
+        and typ[m.end()] == "="
+        and not typ.startswith(("{", "[", "(", "|"))
+    ):
+        # (name=type): define AND apply
+        name = m.group(0)
+        inner = parse_type_string(typ[m.end() + 1 :], named)
+        named[name] = inner
+        return ("named", name, inner)
+    if typ in named:
+        return ("named", typ, named[typ])
+    if typ in _PRIMS:
+        return ("prim", typ)
+    try:
+        return parse_type_string(typ, named)
+    except Exception:
+        return d
 
 
 # zed type IDs (reference type.go:105-137) — CompareTypes orders
