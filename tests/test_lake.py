@@ -270,8 +270,8 @@ def test_ordered_scan_unique_keys_plans_no_python(spark, lake):
 def test_key_dups_answered_from_import_stats(spark, lake):
     """Ordered scans answer 'do keys collide?' from the commit
     journal's import-time stats — ZERO Spark jobs at plan time
-    (round-8 VERDICT item 6).  The groupBy probe is only the legacy
-    fallback when an object predates the recorded bit."""
+    (round-8 VERDICT item 6).  An object that predates the recorded
+    bit answers True: the collision window then decides per row."""
     ev = read_table(spark, SF_DIR, "events").limit(100)
     pool = lake.create_pool("statuniq", key="event_id")
     pool.load(ev)
@@ -299,13 +299,13 @@ def test_key_dups_answered_from_import_stats(spark, lake):
     pool4.load(hi)
     assert pool4._key_dups_from_stats(pool4._live_objects("main")) is False
 
-    # legacy entry without the bit -> None (caller probes)
+    # legacy entry without the bit -> True (the window decides)
     st = pool._commit_index()
     anyc = next(iter(st.values()))
     anyc.get("stats", {}).pop("key_dups", None)
     import json as _j
     # simulate by asking over an object absent from the journal
-    assert pool._key_dups_from_stats(["obj_nonexistent"]) is None
+    assert pool._key_dups_from_stats(["obj_nonexistent"]) is True
     _ = _j
 
 
@@ -477,8 +477,8 @@ def test_ordered_scan_keyless_matches_union_form(spark, lake):
 
 
 def test_ordered_scan_legacy_probe_matches_union_form(spark, lake):
-    """Objects without recorded collision stats take the groupBy
-    probe, then the same sort-key tiebreak."""
+    """Objects without recorded collision stats take the sort-key
+    tiebreak, and its collision window finds the colliding rows."""
     import json
 
     pool = lake.create_pool("legacy", key="k", order="asc")
@@ -489,7 +489,7 @@ def test_ordered_scan_legacy_probe_matches_union_form(spark, lake):
         e.pop("stats", None)
     with open(log, "w") as fh:
         fh.writelines(json.dumps(e) + "\n" for e in entries)
-    assert pool._key_dups_from_stats(pool._live_objects()) is None
+    assert pool._key_dups_from_stats(pool._live_objects()) is True
     assert _rows(pool.scan(ordered=True)) == _rows(_ordered_union_form(pool))
 
 
@@ -501,20 +501,60 @@ def _plan(spark, root, text):
 
 
 def test_ordered_scan_tiebreak_follows_the_sort(spark, lake):
-    """Where Catalyst drops the scan's sort (an order-insensitive
-    aggregate) the collision window and the Python encode go with
-    it; where the order is consumed they stay, over one read of the
+    """An order-free summarize (a float sum and avg too) reads the
+    unordered scan: no sort, no collision window, no Python encode.
+    Where the order is consumed they stay, over one read of the
     pool."""
     pool = lake.create_pool("plans", key="k", order="asc")
     _load_zson(pool, _ZSON_ROWS)
     _load_zson(pool, _ZSON_ROWS)
-    for text in ("from plans | count() by k", "from plans | max(v) by k"):
+    for text in (
+        "from plans | count() by k",
+        "from plans | max(v) by k",
+        "from plans | sum(v) by k",
+        "from plans | where v > 1.0 | avg(v)",
+    ):
         plan = _plan(spark, lake.root, text)
         assert "Window" not in plan and "Python" not in plan, plan
-    for text in ("from plans | head 3", "from plans | sum(v) by k"):
+        assert "Sort" not in plan and plan.count("FileScan") == 1, plan
+    for text in (
+        "from plans | head 3",
+        "from plans | tail 3",
+        "from plans | collect(v) by k",
+    ):
         plan = _plan(spark, lake.root, text)
         assert "Window" in plan and "ArrowEvalPython" in plan, plan
         assert "Union" not in plan and plan.count("FileScan") == 1, plan
+
+
+def test_served_float_sum_is_order_free(spark, lake):
+    """A served float `sum by` over an unordered scan equals the
+    exactly rounded sum of the pool's values to within 1e-12."""
+    import json
+    import math
+    import random
+
+    from zed_spark.service import QueryService
+
+    rng = random.Random(7)
+    pool = lake.create_pool("fsum", key="ts", order="desc")
+    want: dict = {}
+    for batch in range(4):
+        rows = []
+        for i in range(500):
+            k, v = f"e{i % 3}", rng.random() * 10 ** rng.randint(-3, 6)
+            want.setdefault(k, []).append(v)
+            rows.append((batch * 500 + i, k, v))
+        pool.load(spark.createDataFrame(rows, "ts long, k string, v double"))
+    svc = QueryService(spark, lake_root=lake.root)
+    body = json.dumps({"query": "from fsum | s:=sum(v) by k"}).encode()
+    resp = svc.handle_api(
+        "POST", "/query", {}, {"accept": "application/json"}, body
+    )
+    got = {r["k"]: r["s"] for r in json.loads(resp[2])}
+    assert got.keys() == want.keys()
+    for k, vs in want.items():
+        assert math.isclose(got[k], math.fsum(vs), rel_tol=1e-12), k
 
 
 # --- scans plan from the commit journal --------------------------------

@@ -35,6 +35,36 @@ def test_parse_implied_ops():
     assert parse("error")[0][0] == "search"
 
 
+@pytest.mark.parametrize("text, ordered", [
+    ("from p", True),
+    ("from p | head 3", True),
+    ("from p | tail 3", True),
+    ("from p | sort v", True),
+    ("from p | uniq", True),
+    ("from p | put n:=count()", True),
+    ("from p | where count() >= 4", True),
+    ("from p | first(v) by k", True),
+    ("from p | collect(v) by k", True),
+    ("from p | fork (=> count() => sum(v))", True),
+    ("from p | sum(v) by k", False),
+    ("from p | avg(v)", False),
+    ("from p | count() by k | sort k | head", False),
+    ("from p | where v > 3 | min(v), max(v) by k", False),
+    ("from p | join (from q | count()) on k=k n:=count", True),
+    ("from p | put x:=v+1 | cut x, k | drop k | dcount(x)", False),
+    ("from p | sum(v) by k:=count()", True),
+    ("from p | count() where sum(v) > 1 by k", True),
+    ("func f(x): (x+1) from p | put y:=f(v) | count()", True),
+    ("count() by k", True),
+])
+def test_scan_order_requirement(text, ordered):
+    """Only the leading `from` of a pipeline that reaches an
+    order-free summarize through neutral ops reads unordered."""
+    from zed_spark.lang.order import scan_needs_order
+
+    assert scan_needs_order(parse(text)) is ordered
+
+
 def test_parse_errors():
     with pytest.raises(SyntaxError):
         parse("from x | sort -q")

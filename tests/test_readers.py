@@ -198,3 +198,19 @@ def test_executor_side_writers_accept_uris(spark, tmp_path):
 
     with pytest.raises(ValueError, match="no executor-side filesystem"):
         write_zng(df, "nosuchscheme://bucket/x")
+
+
+def test_from_format_hint_reaches_the_reader(spark, tmp_path):
+    """`from <path> format <fmt>` reads an extension-less-looking file
+    with the named reader instead of sniffing it."""
+    from zed_spark.session import ZedSession
+
+    z = ZedSession(spark)
+    csv = tmp_path / "t.dat"
+    csv.write_text("a,b\n1,x\n2,y\n")
+    js = tmp_path / "j.dat"
+    js.write_text('{"a":3,"b":"z"}\n{"a":4,"b":"w"}\n')
+    got = z.query(f"from {csv} format csv | sort a").df.collect()
+    assert [(r["a"], r["b"]) for r in got] == [(1, "x"), (2, "y")]
+    got = z.query(f"from {js} format json | sort a").df.collect()
+    assert [(r["a"], r["b"]) for r in got] == [(3, "z"), (4, "w")]

@@ -895,7 +895,7 @@ def _run_db_script_case(spark, case: dict, path: str, root: str | None = None):
             name = state["use"].partition("@")[0] if state["use"] else ""
         return name, branch or "main"
 
-    def resolve(name, fmt=None):
+    def resolve(name, fmt=None, ordered=True):
         if name == ":pools":
             return lake.meta_pools()
         if name == ":branches":
@@ -945,7 +945,7 @@ def _run_db_script_case(spark, case: dict, path: str, root: str | None = None):
                 raise ValueError(f"unknown meta query {meta!r}")
             try:
                 nm2, _, br2 = base.partition("@")
-                return lake.pool(nm2).scan(br2 or "main", ordered=True)
+                return lake.pool(nm2).scan(br2 or "main", ordered=ordered)
             except ValueError as e:
                 if "is empty" in str(e):
                     # empty pool scans yield nothing, not an error
@@ -2745,7 +2745,7 @@ def _run_script_case(spark, case: dict, path: str):
             except Exception:
                 pass
 
-        def resolve(name, fmt=None):
+        def resolve(name, fmt=None, ordered=True):
             raw = files[name]
             if fmt == "csv" or (fmt is None and name.endswith(".csv")):
                 from zed_spark.sources.csv_io import parse_csv_values
@@ -3256,7 +3256,7 @@ def _run_case(spark, path: str):
             out = compile_query(
                 spark,
                 case["zed"],
-                lambda n: (_ for _ in ()).throw(ValueError(n)),
+                lambda n, **_: (_ for _ in ()).throw(ValueError(n)),
                 df,
             )
             out.collect()
@@ -3310,7 +3310,7 @@ def _run_case(spark, path: str):
         out = _cq(
             spark,
             case["zed"],
-            lambda n: (_ for _ in ()).throw(ValueError(n)),
+            lambda n, **_: (_ for _ in ()).throw(ValueError(n)),
             df,
         )
         _compare_case(out, False, case, path)
@@ -3385,7 +3385,7 @@ def _run_case(spark, path: str):
     out = compile_query(
         spark,
         case["zed"],
-        lambda n: (_ for _ in ()).throw(ValueError(n)),
+        lambda n, **_: (_ for _ in ()).throw(ValueError(n)),
         df,
         named_types=named,
         named_descs=locals().get("named_descs"),

@@ -91,10 +91,10 @@ def main(argv=None) -> int:
     if df is not None:
         from zed_spark.lang.compiler import compile_query
 
-        def resolve(name):
+        def resolve(name, fmt=None, ordered=True):
             from zed_spark.sources.readers import read_any as _ra
 
-            return _ra(spark, name)
+            return _ra(spark, name, fmt=fmt or "auto")
 
         out = compile_query(spark, query, resolve, df)
     else:

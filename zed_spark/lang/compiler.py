@@ -74,13 +74,15 @@ class Compiler:
     def __init__(
         self,
         spark: SparkSession,
-        source_resolver: Callable[[str], DataFrame],
+        source_resolver: Callable[..., DataFrame],
         input_df: DataFrame | None = None,
     ):
         self.spark = spark
         self.resolve = source_resolver
         self.input_df = input_df
         self.fns = _fn_table()
+        # the one `from` node that may read an unordered scan
+        self.unordered_from = None
 
     # Plan-time distinct probes (parse_zson legs, shape/unflatten
     # signatures, dynamic-field combos) compile one plan slice per
@@ -151,14 +153,13 @@ class Compiler:
             ):
                 return self._dynamic_fields(df, node)
         if kind == "from":
-            if len(node) > 2:
-                # explicit `format X`: resolvers that understand a
-                # format hint take it; legacy ones get the bare name
-                try:
-                    return self.resolve(node[1], node[2])
-                except TypeError:
-                    return self.resolve(node[1])
-            return self.resolve(node[1])
+            # resolver hints: an explicit `format X`, and the unordered
+            # scan for the leading `from` of an order-free pipeline
+            # (lang/order.py)
+            hints = {"fmt": node[2]} if len(node) > 2 else {}
+            if node is self.unordered_from:
+                hints["ordered"] = False
+            return self.resolve(node[1], **hints)
         if kind == "frommulti" and df is None:
             # source position: from ( file a [=> ops]  file b ) —
             # resolve each leg, run its sub-pipeline, and combine
@@ -10768,24 +10769,31 @@ def _subst(e: tuple, mapping: dict[str, tuple]) -> tuple:
 def compile_query(
     spark: SparkSession,
     text: str,
-    source_resolver: Callable[[str], DataFrame],
+    source_resolver: Callable[..., DataFrame],
     input_df: DataFrame | None = None,
     lake=None,
     named_types: dict[str, str] | None = None,
     named_descs: dict | None = None,
 ) -> DataFrame:
-    """named_types: name → Spark DDL for types defined by the INPUT's
+    """source_resolver(name, fmt=None, ordered=True) → the DataFrame
+    a `from` reads; fmt is an explicit `format X`, ordered=False is
+    passed only for the leading `from` of an order-free pipeline.
+    named_types: name → Spark DDL for types defined by the INPUT's
     ZSON decorators (parse_zson_typed), referenceable as <name>.
     named_descs: name → ztypes descriptor for the same definitions —
     enables first-occurrence named rendering in type values so they
     compare equal against per-row typeof() strings (__zed_types)."""
+    from zed_spark.lang.order import scan_needs_order
     from zed_spark.lang.parser import parse
 
+    pipeline = parse(text)
     c = Compiler(spark, source_resolver, input_df)
     c.lake = lake
     c.input_types = {n: ("ddl", d) for n, d in (named_types or {}).items()}
     c.named_descs = named_descs or {}
-    return c.run(parse(text))
+    if not scan_needs_order(pipeline):
+        c.unordered_from = next(n for n in pipeline if n[0] == "from")
+    return c.run(pipeline)
 
 
 def compile_where_column(

@@ -407,7 +407,10 @@ class QueryService:
     def _render_rows(self, rows: list | None, df, fmt: str, ctrl=False) -> bytes:
         """`_capped_rows` output → payload in the negotiated format."""
         if rows is None:
-            return self._write_spark(df.limit(self.max_rows), fmt)
+            # Spark's writers see only the visible columns; the
+            # driver-rendered formats drop the __zed_* sidecars too
+            side = [c for c in df.columns if c.startswith("__zed_")]
+            return self._write_spark(df.drop(*side).limit(self.max_rows), fmt)
         schema = df.schema
         if fmt == "vng":
             from zed_spark.sources.vng import encode_vng

@@ -148,7 +148,7 @@ class ZedSession:
         from zed_spark.lang import compile_query
         from zed_spark.zframe import ZFrame
 
-        def resolve(name: str):
+        def resolve(name: str, fmt: str | None = None, ordered: bool = True):
             if tables and name in tables:
                 t = tables[name]
                 return t.df if isinstance(t, ZFrame) else t
@@ -169,7 +169,7 @@ class ZedSession:
                         "branches": pool.meta_branches,
                     }[meta]()
                 if name.partition("@")[0] in lk.pools():
-                    return lk.scan_ref(name)
+                    return lk.scan_ref(name, ordered=ordered)
             if sf_dir is not None:
                 import os
 
@@ -182,7 +182,7 @@ class ZedSession:
                 raise ValueError(f"unknown source {name!r} (registered tables only)")
             from zed_spark.sources.readers import read_any
 
-            return read_any(self.spark, name)
+            return read_any(self.spark, name, fmt=fmt or "auto")
 
         lk = None
         if lake is not None:

@@ -361,14 +361,18 @@ class Lake:
         cfg["name"] = new
         fsio.write_text(meta, json.dumps(cfg))
 
-    def scan_ref(self, ref: str) -> DataFrame:
+    def scan_ref(self, ref: str, ordered: bool = True) -> DataFrame:
         """Scan `pool` or `pool@branch` (the reference's from-clause
         commitish syntax, lake/parse.go).  Query-facing: the
         reference's seqscan streams in pool-key order, so this entry
-        is ordered; analytical callers that don't need order use
-        Pool.scan directly (ordered=False default)."""
+        is ordered unless the compiler's order-requirement pass
+        (lang/order.py) finds that nothing consumes the order: a
+        pipeline that reaches an order-free `summarize` (count, sum,
+        avg, min, max, dcount, and, or) through filters and
+        projections reads the unordered scan, as the reference's
+        parallel summarize does."""
         name, _, branch = ref.partition("@")
-        return self.pool(name).scan(branch or "main", ordered=True)
+        return self.pool(name).scan(branch or "main", ordered=ordered)
 
     def pools(self) -> list[str]:
         from urllib.parse import unquote
@@ -721,22 +725,20 @@ class Pool:
 
     def _key_dups_from_stats(
         self, objs, by_id: dict[str, dict] | None = None
-    ) -> bool | None:
+    ) -> bool:
         """Plan-time key-collision answer from import-time stats
-        (round-8 verdict item 6): True/False when every live object
-        carries the recorded bit + key range, None for legacy objects
-        (caller falls back to the one-row groupBy probe).  Collisions
-        exist when any object saw internal dups, null keys may meet
-        across objects, or two objects' key ranges touch."""
+        (round-8 verdict item 6).  Collisions exist when any object
+        saw internal dups, null keys may meet across objects, or two
+        objects' key ranges touch.  A legacy object without the
+        recorded bit answers True: the tiebreak's collision window
+        then finds the colliding rows itself."""
         if by_id is None:
             by_id = self._commit_index()
         ranges = []
         total_nulls = 0
         for o in objs:
             st = self._object_commit(o, by_id).get("stats")
-            if not st or "key_dups" not in st:
-                return None
-            if st["key_dups"]:
+            if not st or st.get("key_dups", True):
                 return True
             nk = st.get("null_keys", 0) or 0
             total_nulls += nk
@@ -846,13 +848,16 @@ class Pool:
         ordered=True reproduces the reference's key-ordered scan
         (asc/desc per the pool config; equal keys by the record's ZNG
         bytes).  The order is one global sort whose key carries the
-        equal-key tiebreak, so it costs nothing when the consumer
-        ignores order: under an order-insensitive aggregate (count,
-        min, max, an integral sum) Catalyst drops the sort, and the
-        tiebreak's collision window and Python encode with it.  Where
-        the order is consumed (head, tail, a float sum) the pool is
-        read once.  Off by default: analytical callers that never
-        need order skip the sort."""
+        equal-key tiebreak; where Catalyst drops the sort, the
+        tiebreak's collision window and Python encode go with it.
+        Its consumers are the queries whose leading `from` the
+        order-requirement pass (lang/order.py) keeps ordered: a bare
+        `from`, head, tail, sort (stable on ties), uniq, sample,
+        order-dependent aggregates (first, last, collect, any, union,
+        collect_map, fuse), running aggregates in put/where, fork,
+        switch, join, over, merge and user-op calls; and every `from`
+        that is not the leading one.  Off by default: analytical
+        callers and order-free summaries skip the sort."""
         # one read of the commit log and the branch refs per scan
         commits = self.commits()
         by_id = self._commit_index(commits)
@@ -899,19 +904,8 @@ class Pool:
             return df.orderBy(*order).drop("__zed_seq")
         key = F.col(self.cfg.key)
         # answer "do any keys collide?" from import-time commit stats
-        # (zero jobs at plan time); the groupBy probe runs only for
-        # legacy objects without the recorded bit.  Unique-key scans
-        # plan no tiebreak at all.
+        # (zero jobs at plan time); unique-key scans plan no tiebreak
         has_dups = self._key_dups_from_stats(objs, by_id)
-        if has_dups is None:
-            has_dups = (
-                df.groupBy(self.cfg.key)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-                > 0
-            )
         # nulls are the MAX key value in either pool order
         # (runtime/sam/op/meta/ztests/nulls-max.yaml): asc → nulls
         # last, desc → nulls first
