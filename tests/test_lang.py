@@ -24,6 +24,9 @@ def q(z, text):
 def test_parse_pipeline_shapes():
     ast = parse("from events | where value > 100 | count() by event_type | sort -r count | head 5")
     assert [n[0] for n in ast] == ["from", "where", "summarize", "sort", "head"]
+    # a declared const folds into a head/tail count
+    assert parse("const N=3 from p | head N+1")[-1] == ("head", 4)
+    assert parse("const N=3 const M=N*2 from p | tail M")[-1] == ("tail", 6)
 
 
 def test_parse_implied_ops():
@@ -56,6 +59,9 @@ def test_parse_implied_ops():
     ("from p | count() where sum(v) > 1 by k", True),
     ("func f(x): (x+1) from p | put y:=f(v) | count()", True),
     ("count() by k", True),
+    ("const N=3 from p | head N", True),
+    ("const N=3 from p | tail N", True),
+    ("const N=3 from p | head N+1", True),
 ])
 def test_scan_order_requirement(text, ordered):
     """Only the leading `from` of a pipeline that reaches an

@@ -47,9 +47,10 @@ _F = "function form beyond the engine's static-type dispatch [func]"
 _SC = "shell form outside the harness script subset [script]"
 
 # Round 7 closed every [union]/[shape]/[errval]/[func] doc gap; round
-# 8 took the zfmt canonical print and the const-LHS op-param error.
-# The two left are genuine boundaries: a sketch point-estimate and a
-# network source.
+# 8 took the const-LHS op-param error. A block that prints a plan
+# (`super dev compile`, `super query -C`) skips with the ztest
+# harness's `_DEV` reason: the engine has no plan printer. The gap
+# declared below is a genuine boundary.
 MD_UNSUPPORTED: dict[str, str] = {
     "operators/from.md:7": "`from https://...` network source [script]",
 }

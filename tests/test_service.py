@@ -45,6 +45,75 @@ def test_query_json_envelope(svc):
     assert len(body.splitlines()) == 3
 
 
+def _channel_frames(url, query):
+    """(type, channel) of each channel frame of a ctrl=true zjson
+    /query response, in response order."""
+    req = urllib.request.Request(
+        f"{url}/query?ctrl=true",
+        data=json.dumps({"query": query}).encode(),
+        method="POST",
+        headers={"Accept": "application/x-zjson"},
+    )
+    with urllib.request.urlopen(req, timeout=60) as resp:
+        frames = [json.loads(ln) for ln in resp.read().decode().splitlines()]
+    return [
+        (f["type"], f["value"]["channel"])
+        for f in frames
+        if f["type"] in ("QueryChannelSet", "QueryChannelEnd")
+    ]
+
+
+@pytest.mark.parametrize("query, channels", [
+    ("from events | fork (=> count() | output main "
+     "=> head 1 | output secondary)", ["main", "secondary"]),
+    ("from events | switch ( case value > 50.0 => output a "
+     "default => output b )", ["a", "b"]),
+    ("from events | fork (=> fork (=> head 1 | output x "
+     "=> head 2 | output y) => head 3 | output z)", ["x", "y", "z"]),
+    ("from events | count() by event_type", ["main"]),
+])
+def test_zjson_ctrl_channel_frames(svc, query, channels):
+    """ctrl=true zjson opens and closes one channel per `output` op,
+    in the order the ops appear; a query with none has only main."""
+    want = []
+    for ch in channels:
+        want += [("QueryChannelSet", ch), ("QueryChannelEnd", ch)]
+    assert _channel_frames(svc, query) == want
+
+
+def test_compile_agrees_with_query_parser(spark):
+    """POST /compile accepts exactly what /query's parser accepts and
+    returns that parser's AST; a rejected query reports the parser's
+    error position."""
+    from zed_spark.lang.parser import parse
+
+    s = QueryService(spark, sf_dir=SF_DIR)
+    for text in [
+        "from p | where v > 3 | min(v), max(v) by k",
+        "from t | shape {b:int64, a:string}",
+        "from t | crop {a:int64}",
+        "from events | sort -q",
+        "from events | count() by event_type",
+        "from p | count( by",
+    ]:
+        code, _, body = s.handle_api(
+            "POST", "/compile", {}, {},
+            json.dumps({"query": text}).encode(),
+        )[:3]
+        out = json.loads(body)
+        try:
+            ast = parse(text)
+        except SyntaxError as e:
+            assert code == 400, text
+            pos = int(str(e).rsplit(" at ", 1)[1])
+            assert out["compilation_errors"] == [
+                {"Msg": "error parsing SuperPipe", "Pos": pos, "End": -1}
+            ], text
+        else:
+            assert code == 200, text
+            assert out == json.loads(json.dumps(ast, default=str)), text
+
+
 def test_parse_error_400(svc):
     code, body = _post(svc, "from events | sort -q")
     assert code == 400 and "parse" in json.loads(body)["error"]

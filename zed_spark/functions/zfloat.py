@@ -24,8 +24,8 @@ strconv 'g' on the non-integer branch.
 This was a round-11 catch of the round-10 zigzag class: the ZSON and
 ZJSON writers each had their own float rendering ("3.0", "3") that
 round-tripped against our own parser while diverging byte-wise from
-reference output. One shared function now feeds zson/_dump_value,
-zjson, and zfmt literals; vectors pinned in tests/test_codec_vectors.py.
+reference output. One shared function now feeds zson/_dump_value
+and zjson; vectors pinned in tests/test_codec_vectors.py.
 """
 
 from __future__ import annotations

@@ -4,13 +4,24 @@ Produces a plain-tuple AST:
   pipeline: list of op nodes
   op nodes: ('from',name) ('where',e) ('search',term) ('cut',[(path,alias)])
             ('put',[(path,e)]) ('drop',[path]) ('rename',[(new,old)])
-            ('summarize',[aggs],[keys],every) ('sort',keys,desc)
+            ('summarize',[aggs],[keys],every) ('sort',keys,desc,nulls)
             ('head',n) ('tail',n) ('top',n,[k]) ('uniq',count) ('fuse',)
-            ('yield',[e]) ('over',e) ('join',kind,lk,rk,[cut],subquery)
+            ('yield',[e]) ('over',e,with,scoped) ('join',kind,lk,rk,[cut],subquery)
+            ('fork',[pipeline]) ('switch',selector,[(case,pipeline)])
+            ('outputop',name) ('frommulti',[(source,pipeline)])
+            ('scope',pipeline,consts,funcs) ('opcall',name,[args])
+            ('shapeop',word,type) ('exprop',e) ('merge',[e]) ('load',...)
+            ('decls',funcs,consts,ops,types) — leads the list when the
+            query declares any
   exprs:    ('num',v) ('str',s) ('bool',b) ('null',) ('time',s) ('dur',s)
             ('field',[parts]) ('this',) ('bin',op,l,r) ('un',op,e)
             ('call',name,[args]) ('cond',c,t,f) ('index',e,i)
             ('slice',e,lo,hi) ('record',[(n,e)]) ('array',[e]) ('in',l,r)
+
+This is the only zed-language parser: the CLI, the library and every
+service route (`/query`, `/query/describe`, `/compile`, the `ctrl=true`
+channel list) read this AST; `/compile` returns it as JSON (tuples as
+arrays).
 
 Grammar reference: compiler/parser/parser.peg (semantics only — this
 is an independent implementation of a subset).
@@ -103,9 +114,12 @@ class Parser:
         return t
 
     def _const_int(self, e: tuple) -> int:
-        """Fold a constant integer expression (head/tail counts)."""
+        """Fold a constant integer expression (head/tail counts); a
+        declared const folds through its value (`const N=3 ... head N`)."""
         if e[0] == "num":
             return int(e[1])
+        if e[0] == "field" and len(e[1]) == 1 and e[1][0] in self.consts:
+            return self._const_int(self.consts[e[1][0]])
         if e[0] == "bin" and e[1] in ("+", "-", "*", "%", "/"):
             lo, hi = self._const_int(e[2]), self._const_int(e[3])
             import operator as _op
@@ -456,7 +470,7 @@ class Parser:
                     if nulls not in ("first", "last"):
                         raise SyntaxError(f"sort -nulls: expected first|last, got {nulls!r}")
                 else:
-                    raise SyntaxError(f"unknown sort flag -{flag.text}")
+                    raise SyntaxError(f"unknown sort flag -{flag.text} at {flag.pos}")
             keys = []
 
             def key():

@@ -765,15 +765,15 @@ class QueryService:
             return 200, "text/html", self.root_content.encode()
         if path == "/compile" and method == "POST":
             # POST /compile (service/handlers.go:166 handleCompile):
-            # parse the query and return the serialized AST; parse
-            # failures respond with the parser ErrorList shape
-            # ({Msg,Pos,End} — compiler/parser/api.go:58).
+            # parse the query with the same parser /query runs and
+            # return its AST (tuples as JSON arrays); parse failures
+            # respond with the parser ErrorList shape ({Msg,Pos,End} —
+            # compiler/parser/api.go:58).
             spec = json.loads(body.decode() or "{}") if body.strip() else {}
-            text = spec.get("query") or ""
-            from zed_spark.lang.zfmt import parse_raw
+            from zed_spark.lang.parser import parse
 
             try:
-                seq = parse_raw(text)
+                ast = parse(spec.get("query") or "")
             except Exception as e:
                 m = re.search(r"(?:at|pos)\s+(\d+)", str(e))
                 pos = int(m.group(1)) if m else 0
@@ -790,7 +790,7 @@ class QueryService:
                     json.dumps(payload) + "\n"
                 ).encode()
             return 200, "application/json", (
-                json.dumps(seq, default=str) + "\n"
+                json.dumps(ast, default=str) + "\n"
             ).encode()
         if path == "/query/describe" and method == "POST":
             spec = json.loads(body.decode() or "{}") if body.strip() else {}
@@ -939,33 +939,20 @@ class QueryService:
         """Output channel names of a query, in appearance order
         (`output NAME` ops; default channel is main) — the zjson
         mux's QueryChannelSet/End frames are per channel."""
-        try:
-            from zed_spark.lang.zfmt import parse_raw
+        from zed_spark.lang.parser import parse
 
-            names: list[str] = []
+        names: list[str] = []
 
-            def walk(seq):
-                for op in seq:
-                    if not isinstance(op, dict):
-                        continue
-                    if op.get("k") == "Output":
-                        if op["name"] not in names:
-                            names.append(op["name"])
-                    for v in op.values():
-                        if isinstance(v, list):
-                            for x in v:
-                                if isinstance(x, list):
-                                    walk(x)
-                                elif isinstance(x, tuple):
-                                    for y in x:
-                                        if isinstance(y, list):
-                                            walk(y)
-                            walk(v)
+        def walk(node):
+            if isinstance(node, tuple) and node[:1] == ("outputop",):
+                if node[1] not in names:
+                    names.append(node[1])
+            elif isinstance(node, (tuple, list)):
+                for x in node:
+                    walk(x)
 
-            walk(parse_raw(text))
-            return names or ["main"]
-        except Exception:
-            return ["main"]
+        walk(parse(text))
+        return names or ["main"]
 
     @staticmethod
     def _writer_error(e: Exception, fmt: str, df) -> str | None:
