@@ -198,6 +198,25 @@ def test_served_query_runs_one_execution(svc, spark, text):
     assert served == collect, (served, planning, collect)
 
 
+def test_summarize_type_probe_is_one_aggregation(svc, spark):
+    """On a pool with the `__zed_types` sidecar, summarize probes every
+    field key's runtime types in ONE aggregation: planning a two-key
+    group-by starts no more jobs than a one-key one."""
+    from zed_spark.session import ZedSession
+
+    sc = spark.sparkContext
+
+    def plan(text):
+        return ZedSession(spark).query(
+            text, allow_paths=False, lake=svc.lake_root
+        ).df
+
+    plan("from asc | count() by k, s")  # warm the plan caches
+    one = _jobs(sc, lambda: plan("from asc | count() by k"))
+    two = _jobs(sc, lambda: plan("from asc | count() by k, s"))
+    assert 0 < one and two <= one, (one, two)
+
+
 if __name__ == "__main__":
     from zed_spark.session import build_spark
 

@@ -214,3 +214,38 @@ def test_from_format_hint_reaches_the_reader(spark, tmp_path):
     assert [(r["a"], r["b"]) for r in got] == [(1, "x"), (2, "y")]
     got = z.query(f"from {js} format json | sort a").df.collect()
     assert [(r["a"], r["b"]) for r in got] == [(3, "z"), (4, "w")]
+
+
+def test_read_table_memoizes_schema_per_file(spark, tmp_path):
+    """`read_table` infers a parquet schema once per file: a repeated
+    read plans from the memo with no footer job, and a rewritten file
+    (new size/mtime) infers again, replacing its path's one entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from zed_spark.sources import readers
+
+    path = tmp_path / "docs.parquet"
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), path)
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        before = set(sc.statusTracker().getJobIdsForGroup() or [])
+        out = fn()
+        return out, len(set(sc.statusTracker().getJobIdsForGroup() or []) - before)
+
+    first = readers.read_table(spark, str(tmp_path), "docs")
+    again, n = jobs(lambda: readers.read_table(spark, str(tmp_path), "docs"))
+    assert n == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    pq.write_table(
+        pa.table({"doc_id": [3], "text": ["c"], "lang": ["en"]}), path
+    )
+    df = readers.read_table(spark, str(tmp_path), "docs")
+    assert df.columns == ["doc_id", "text", "lang"]
+    assert [tuple(r) for r in df.collect()] == [(3, "c", "en")]
+    assert [k for k in readers._SCHEMA_MEMO if k[1] == str(path)] == [
+        (sc.applicationId, str(path))
+    ]

@@ -114,6 +114,31 @@ def test_compile_agrees_with_query_parser(spark):
             assert out == json.loads(json.dumps(ast, default=str)), text
 
 
+@pytest.mark.parametrize(
+    "text, pos",
+    [
+        ("from p | uniq -x", 15),
+        ("from p | switch ( )", 18),
+        ("from p | fork ( )", 16),
+        ("from p | explode a x", 19),
+        ("from p | head x", 14),
+        ("from p | load", 13),
+    ],
+)
+def test_compile_error_positions(spark, text, pos):
+    """Parser errors carry the position of the offending token, so
+    POST /compile reports it instead of Pos 0; a `load` with no pool
+    name is a syntax error, not a load into pool ''."""
+    s = QueryService(spark, sf_dir=SF_DIR)
+    code, _, body = s.handle_api(
+        "POST", "/compile", {}, {}, json.dumps({"query": text}).encode()
+    )[:3]
+    assert code == 400, body
+    assert json.loads(body)["compilation_errors"] == [
+        {"Msg": "error parsing SuperPipe", "Pos": pos, "End": -1}
+    ]
+
+
 def test_parse_error_400(svc):
     code, body = _post(svc, "from events | sort -q")
     assert code == 400 and "parse" in json.loads(body)["error"]

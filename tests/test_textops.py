@@ -251,12 +251,14 @@ def test_cc_near_clique_converges_in_three_rounds(spark):
 
 
 def test_cc_round2_lazy_checkpoint_reusable(spark):
-    """Round 2 checkpoints the propagated labels (eager again since
-    round 12 — the lazy probe-materialized form regressed 0.81x on
-    the driver because the probe's LocalLimit job cancels tasks
-    before their blocks register). The returned labels frame must
-    stay correct under repeated downstream actions: reuse must hit
-    the checkpointed rows, not replay truncated lineage."""
+    """Every round ends in an eager checkpoint that also observes the
+    round's changed-label count; round 1 is a lazy aggregation that
+    runs inside round 2's checkpoint job. (A lazy checkpoint
+    materialized by a `limit(1)` probe regressed 0.81x: the probe's
+    LocalLimit job cancels tasks before their blocks register.) The
+    returned labels frame must stay correct under repeated downstream
+    actions: reuse must hit the checkpointed rows, not replay
+    truncated lineage."""
     import zed_spark.textops.dedup as dd
 
     edges = [(a, b) for a in range(5) for b in range(a + 1, 5)]
@@ -265,11 +267,45 @@ def test_cc_round2_lazy_checkpoint_reusable(spark):
     expect = {n: 0 for n in range(5)}
     first = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
     assert first == expect
-    # the clique must have broken at the round-2 probe (the lazy path)
+    # the clique must have converged at round 2's observed count
     assert dd._LAST_CC_ROUNDS == 2
-    # repeated actions over the probe-materialized checkpoint
+    # repeated actions over the round-2 checkpoint
     assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == expect
     assert out.count() == 5
+
+
+def test_cc_runs_no_probe_job(spark):
+    """Convergence is read off the round's checkpoint job (an observed
+    changed-label count), not a separate `limit(1).count()` probe:
+    on two 6-cliques the whole call is the edge checkpoint plus round
+    2's checkpoint stages — 7 jobs; the probe loop took 12-13."""
+    import zed_spark.textops.dedup as dd
+
+    edges = [
+        (a, b)
+        for base in (0, 100)
+        for a in range(base, base + 6)
+        for b in range(a + 1, base + 6)
+    ]
+    pairs = spark.createDataFrame(edges, "id_a: long, id_b: long")
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup() or [])
+    out = dd.connected_components(pairs)
+    jobs = len(set(sc.statusTracker().getJobIdsForGroup() or []) - before)
+    assert dd._LAST_CC_ROUNDS == 2
+    assert jobs <= 7, jobs
+    assert out.filter("cluster_id = 0").count() == 6
+
+
+def test_cc_empty_pairs(spark):
+    """No pairs, no nodes: the observed count is null and the loop
+    stops with an empty labels frame."""
+    from zed_spark.textops.dedup import connected_components
+
+    pairs = spark.createDataFrame([], "id_a: long, id_b: long")
+    out = connected_components(pairs)
+    assert out.columns == ["doc_id", "cluster_id"]
+    assert out.collect() == []
 
 
 def test_minhash_clusters_match_expanded_cc(spark):

@@ -1394,21 +1394,24 @@ class Compiler:
                 # key and survives onto the output sidecar so a
                 # downstream sort can order cross-type
                 # (groupby/ztests/different-key-types). Probe is
-                # compile-time on metadata-sized ztest frames only.
-                for name, e in keys:
-                    if e[0] != "field" or name in kt_names:
-                        continue
-                    per = F.element_at(
+                # compile-time on metadata-sized ztest frames only,
+                # one aggregation for all field keys.
+                per = {
+                    name: F.element_at(
                         F.col("__zed_types"), F.lit(".".join(e[1]))
                     )
-                    try:
-                        nr = df.agg(
-                            F.countDistinct(per).alias("n")
-                        ).first()["n"]
-                    except Exception:
-                        nr = 0
-                    if nr > 1:
-                        by[f"__zed_kt_{name}"] = per
+                    for name, e in keys
+                    if e[0] == "field"
+                }
+                try:
+                    nr = df.agg(
+                        *[F.countDistinct(c) for c in per.values()]
+                    ).first() if per else ()
+                except Exception:
+                    nr = ()
+                for (name, c), n in zip(per.items(), nr):
+                    if n > 1:
+                        by[f"__zed_kt_{name}"] = c
                         kt_names.append(name)
             ev = None
             if every is not None:

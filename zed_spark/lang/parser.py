@@ -113,15 +113,16 @@ class Parser:
             raise SyntaxError(f"expected {text!r}, got {t.text!r} at {t.pos}")
         return t
 
-    def _const_int(self, e: tuple) -> int:
-        """Fold a constant integer expression (head/tail counts); a
-        declared const folds through its value (`const N=3 ... head N`)."""
+    def _const_int(self, e: tuple, pos: int) -> int:
+        """Fold a constant integer expression (head/tail counts) that
+        starts at `pos`; a declared const folds through its value
+        (`const N=3 ... head N`)."""
         if e[0] == "num":
             return int(e[1])
         if e[0] == "field" and len(e[1]) == 1 and e[1][0] in self.consts:
-            return self._const_int(self.consts[e[1][0]])
+            return self._const_int(self.consts[e[1][0]], pos)
         if e[0] == "bin" and e[1] in ("+", "-", "*", "%", "/"):
-            lo, hi = self._const_int(e[2]), self._const_int(e[3])
+            lo, hi = self._const_int(e[2], pos), self._const_int(e[3], pos)
             import operator as _op
 
             f = {
@@ -130,8 +131,8 @@ class Parser:
             }[e[1]]
             return int(f(lo, hi))
         if e[0] == "un" and e[1] == "-":
-            return -self._const_int(e[2])
-        raise SyntaxError(f"expected a constant count, got {e!r}")
+            return -self._const_int(e[2], pos)
+        raise SyntaxError(f"expected a constant count, got {e!r} at {pos}")
 
     def at_end_of_op(self) -> bool:
         t = self.peek()
@@ -352,6 +353,9 @@ class Parser:
             # terminal lake write: load pool[@branch] [author "a"]
             # [message "m"] (reference load op, docs/language/operators/load.md)
             self.next()
+            if self.at_end_of_op():
+                t = self.peek()
+                raise SyntaxError(f"load: expected a pool name at {t.pos}")
             parts = [self.next().text]
             while (
                 self.peek().text in (".", "/", "-", "@", ":")
@@ -413,8 +417,11 @@ class Parser:
             exprs = [self.parse_expr()]
             while self.accept(","):
                 exprs.append(self.parse_expr())
-            if self.next().text != "by":
-                raise SyntaxError("explode: expected 'by <type>'")
+            t = self.next()
+            if t.text != "by":
+                raise SyntaxError(
+                    f"explode: expected 'by <type>', got {t.text!r} at {t.pos}"
+                )
             ty = self.parse_type_expr()
             name = "value"
             if self.peek().text == "as":
@@ -492,8 +499,8 @@ class Parser:
             self.next()
             n = 1
             if not self.at_end_of_op():
-                e = self.parse_expr()
-                n = self._const_int(e)
+                pos = self.peek().pos
+                n = self._const_int(self.parse_expr(), pos)
             return (word, n)
         if word == "top":
             self.next()
@@ -506,8 +513,9 @@ class Parser:
             self.next()
             count = False
             if self.accept("-"):
-                if self.next().text != "c":
-                    raise SyntaxError("unknown uniq flag")
+                flag = self.next()
+                if flag.text != "c":
+                    raise SyntaxError(f"unknown uniq flag -{flag.text} at {flag.pos}")
                 count = True
             return ("uniq", count)
         if word == "fuse":
@@ -583,9 +591,11 @@ class Parser:
             legs = []
             while self.accept("=>"):
                 legs.append(self.parse_pipeline())
-            self.expect(")")
+            close = self.expect(")")
             if not legs:
-                raise SyntaxError("fork needs at least one '=> ...' leg")
+                raise SyntaxError(
+                    f"fork needs at least one '=> ...' leg at {close.pos}"
+                )
             return ("fork", legs)
         if word == "count" and self.peek(1).text == "(":
             return self.parse_summarize()
@@ -1045,7 +1055,10 @@ class Parser:
         finally:
             self.stop_words = saved_stop
         if not cases:
-            raise SyntaxError("switch needs at least one case")
+            # the ')' just accepted is where a case was expected
+            raise SyntaxError(
+                f"switch needs at least one case at {self.toks[self.i - 1].pos}"
+            )
         return ("switch", selector, cases)
 
     # --- join --------------------------------------------------------

@@ -18,6 +18,8 @@ Formats here:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,12 +37,35 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name in _NS_TS_COLS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for c in _NS_TS_COLS.get(name, []):
         if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
             # integer division: ns are ~2^60, double division would
             # lose precision before the floor
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
+
+
+# parquet schemas memoized per (application, path): given a schema,
+# spark.read.parquet plans without its 1-task footer (schema-inference)
+# job. Each entry is stamped with the file's size and mtime, so a
+# rewritten file infers again and replaces its path's one entry. Like
+# the split-count memo below, it holds plans, not results.
+_SCHEMA_MEMO: dict = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path: nothing to stamp the entry with
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, path)
+    stamp = (st.st_size, st.st_mtime_ns)
+    hit = _SCHEMA_MEMO.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = (stamp, df.schema)
     return df
 
 
